@@ -79,8 +79,12 @@ object Bench {
     *    x128 artifact recorded excisionSpans at 6.2x its x64 wall for
     *    2x data purely by scheduling overlap), so the scale-growth
     *    guard reads the contention-free CPU map from protocol 4 on
-    *    (BenchLadderSpec scopes the per-part bound by protocol). */
-  private[graft] val Protocol = 4
+    *    (BenchLadderSpec scopes the per-part bound by protocol).
+    *  - 5: "warmup_cpu" sums executorCpuTime; protocol 4 summed
+    *    executorRunTime, which is task wall time. The run-time sums
+    *    move to a new "warmup_run" map. Protocol-4 and protocol-5
+    *    "warmup_cpu" maps are not growth-comparable. */
+  private[graft] val Protocol = 5
 
   /** 3 decimal places: millisecond resolution keeps the one-line JSON
     * ~2.5 KB for 100+ queries — BENCH_r03.json was tail-truncated by the
@@ -265,8 +269,8 @@ object Bench {
     // cache first. Total still includes it — nothing hides.
     val w0 = System.nanoTime()
     val gcW0 = gcMs()
-    val (warmupParts, warmupCpu) =
-      profiled("warmup")(SparkEntry.warmupAttributed(spark, sfDir))
+    val SparkEntry.WarmupProfile(warmupParts, warmupCpu, warmupRun) =
+      profiled("warmup")(SparkEntry.warmupProfile(spark, sfDir))
     val warmupSec = (System.nanoTime() - w0) / 1e9
     val warmupGcMs = gcMs() - gcW0
     // noop sink: materializes every output row/column (count() would let
@@ -501,10 +505,12 @@ object Bench {
       .mkString("{", ",", "}")
     val warmupCpuJson = warmupCpu.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
+    val warmupRunJson = warmupRun.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+      .mkString("{", ",", "}")
     val corpusJson = s""""corpus":{"generator_rev":"$genRev","rows":""" +
       corpusRows.map { case (t, n) => "\"" + t + "\":" + n }
         .mkString("{", ",", "}") + "}"
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","warmup_sec":${fmt(warmupSec)},"warmup":$warmupJson,"warmup_cpu":$warmupCpuJson,"failed":$failedJson,"queries":$qs,"first_pass":$firstPassJson,"settle":$settleJson,$corpusJson,$markers,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","warmup_sec":${fmt(warmupSec)},"warmup":$warmupJson,"warmup_cpu":$warmupCpuJson,"warmup_run":$warmupRunJson,"failed":$failedJson,"queries":$qs,"first_pass":$firstPassJson,"settle":$settleJson,$corpusJson,$markers,"sf":"$sfDir"}"""
     // the COMPACT stdout line (protocol 4): everything the driver's
     // 2000-char tail capture can actually parse — run-level value,
     // warmup, failure count, ambient self-attribution, and a pointer to

@@ -1224,18 +1224,36 @@ object SparkEntry {
   def warmup(s: SparkSession, dir: String): Seq[(String, Double)] =
     warmupAttributed(s, dir)._1
 
-  /** warmup + per-derivation EXECUTOR-TIME attribution (protocol 4):
+  /** warmup + per-derivation executor CPU attribution: (wall, cpu) of
+    * [[warmupProfile]]. */
+  def warmupAttributed(s: SparkSession, dir: String)
+      : (Seq[(String, Double)], Seq[(String, Double)]) = {
+    val p = warmupProfile(s, dir)
+    (p.wall, p.cpu)
+  }
+
+  /** Per-derivation warmup cost, seconds, in the canonical derivation
+    * order: `wall` is each derivation's start→finish wall time, `cpu` the
+    * executor CPU time (`executorCpuTime`) and `run` the executor task
+    * run time (`executorRunTime`), both summed over its completed stages. */
+  final case class WarmupProfile(wall: Seq[(String, Double)],
+                                 cpu: Seq[(String, Double)],
+                                 run: Seq[(String, Double)])
+
+  /** warmup + per-derivation EXECUTOR-TIME attribution (protocol 5):
     * under the concurrent pool a derivation's wall time includes
     * whatever its pool neighbors were running (the r14 x128 artifact
     * recorded excisionSpans at 6.2x its x64 wall for 2x data — a
     * scheduling accident, not growth), so the scale-growth guard needs
-    * a contention-free per-part measure. Task time (executorRunTime
-    * summed over the derivation's completed stages, attributed via the
-    * thread-local job description) measures work actually done for the
-    * derivation regardless of what ran beside it. Wall timings stay —
-    * they are the makespan attribution humans read. */
-  def warmupAttributed(s: SparkSession, dir: String)
-      : (Seq[(String, Double)], Seq[(String, Double)]) = {
+    * a contention-free per-part measure. Executor CPU time
+    * (executorCpuTime summed over the derivation's completed stages,
+    * attributed via the thread-local job description) measures work
+    * actually done for the derivation regardless of what ran beside it.
+    * Task run time (executorRunTime) is task wall time: a task thread
+    * the OS has descheduled, or one blocked on a lock or I/O, still
+    * accrues it, so it comes back as the separate `run` map. Wall
+    * timings stay — they are the makespan attribution humans read. */
+  def warmupProfile(s: SparkSession, dir: String): WarmupProfile = {
     // per-derivation timing, returned to the caller AND echoed to
     // stderr: the warmup is the one aggregate cost in the bench line,
     // so its composition must stay observable (the x10 scale run showed
@@ -1266,11 +1284,13 @@ object SparkEntry {
     val timings =
       new java.util.concurrent.ConcurrentHashMap[String, Double]()
     // per-derivation executor-time attribution: job description ->
-    // stage ids at job start, executorRunTime at stage completion.
-    // Skipped (reused) stages never complete and are charged nowhere —
-    // correct, since no executor time was spent on them.
+    // stage ids at job start, executorCpuTime (ns) and executorRunTime
+    // (ms) at stage completion. Skipped (reused) stages never complete
+    // and are charged nowhere — correct, since no executor time was
+    // spent on them.
     val stageOwner = scala.collection.concurrent.TrieMap.empty[Int, String]
-    val cpuMs = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    val cpuNs = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    val runMs = new java.util.concurrent.ConcurrentHashMap[String, Long]()
     val cpuListener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -1284,8 +1304,9 @@ object SparkEntry {
       override def onStageCompleted(
           sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
         stageOwner.get(sc.stageInfo.stageId).foreach { name =>
-          cpuMs.merge(name, sc.stageInfo.taskMetrics.executorRunTime,
-            (a, b) => a + b)
+          val m = sc.stageInfo.taskMetrics
+          cpuNs.merge(name, m.executorCpuTime, (a, b) => a + b)
+          runMs.merge(name, m.executorRunTime, (a, b) => a + b)
         }
     }
     s.sparkContext.addSparkListener(cpuListener)
@@ -1350,11 +1371,11 @@ object SparkEntry {
       pool.shutdown()
       s.sparkContext.setJobDescription(null)
     }
-    // stage-completion events arrive async: poll until the CPU totals
-    // stop moving (the Bench ProfListener protocol), bounded at 2 s
+    // stage-completion events arrive async: poll until the run-time
+    // totals stop moving (the Bench ProfListener protocol), bounded at 2 s
     def cpuTotal: Long = {
       var t = 0L
-      cpuMs.forEach((_, v) => t += v)
+      runMs.forEach((_, v) => t += v)
       t
     }
     var lastCpu = cpuTotal
@@ -1375,8 +1396,9 @@ object SparkEntry {
       "incNgramIndex", "bm25TopK", "dupRuns", "excisionSpans",
       "boilerSpans", "pcaDirections", "ivfCentroids", "dedupIvfCentroids",
       "bpeMerges", "pqCodebook", "pqSubCodebooks", "opqCodebooks")
-    (order.map(n => n -> timings.get(n)),
-      order.map(n => n -> cpuMs.getOrDefault(n, 0L) / 1000.0))
+    WarmupProfile(order.map(n => n -> timings.get(n)),
+      order.map(n => n -> cpuNs.getOrDefault(n, 0L) / 1e9),
+      order.map(n => n -> runMs.getOrDefault(n, 0L) / 1000.0))
   }
 
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame =

@@ -1,7 +1,9 @@
 package graft.app
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 import graft.metrics.MetricsExposition
 import graft.operators._
 import graft.report.ClusterReporting
@@ -18,6 +20,15 @@ import graft.sources.Snapshots
   * cluster report JSON + DataFrame exports. Snapshot ingestion here reads
   * the deterministic fixture derivation; a live deployment swaps in an
   * AdminClient collector producing the same tables.
+  *
+  * A tick works from one snapshot (`runCluster`): the scan fetches the
+  * filtered watermarks and group offsets once and persists them, every
+  * gauge and the report read those frames, and the report's topics/groups
+  * tables are built once for the report and all exports. The tick
+  * releases what it persisted at the next scan and when `runCluster`
+  * returns, dependents first. Frames that were already cached when the
+  * tick got them (fixture mode: the `Snapshots` memo) are neither
+  * persisted nor released by the tick.
   *
   * Usage: GraftApp <config.yaml> <sfDir> <outDir> [ticks]
   */
@@ -98,6 +109,12 @@ object GraftApp {
     System.err.println(s"[graft] streaming mode: ${out.count()} delta rows")
   }
 
+  /** The snapshot one tick works from: filtered watermarks, group offsets
+    * and the groups dimension, as the tick's scan fetched them. */
+  private final case class TickSnapshot(wm: DataFrame, go: DataFrame, gd: DataFrame) {
+    val latest: DataFrame = wm.filter(col("s") === Snapshots.NumScans)
+  }
+
   def runCluster(spark: SparkSession, cluster: ClusterConfig, sfDir: String,
                  outDir: String, ticks: Int,
                  http: Option[graft.metrics.MetricsHttpServer] = None,
@@ -125,25 +142,40 @@ object GraftApp {
       "kafka_overwatch_groups_describe_latency",
       "Time spent fetching consumer group offsets per scan")
 
+    // frames this tick persisted, in persist order
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    // A frame that is already cached belongs to someone else (fixture
+    // mode: the Snapshots memo). Unpersist matches by plan, so releasing
+    // it here would uncache the memo: leave it alone.
+    def hold(df: DataFrame): DataFrame = {
+      if (df.storageLevel == StorageLevel.NONE) { df.persist(); held += df }
+      df
+    }
+    // dependents first (topics/groups, then watermarks/offsets):
+    // unpersisting a parent first makes Spark re-cache its dependents
+    def release(): Unit = { held.reverseIterator.foreach(_.unpersist()); held.clear() }
+    var snapshot: TickSnapshot = null
+
     def scan(): Unit = {
+      release() // the previous tick's frames
       val wm = topicsLatency.time {
-        val f = Scheduler.applyTopicFilters(wmSource(),
-          cluster.topicIncludeRegexes, cluster.topicExcludeRegexes)
+        val f = hold(Scheduler.applyTopicFilters(wmSource(),
+          cluster.topicIncludeRegexes, cluster.topicExcludeRegexes))
         f.count() // force the fetch/derivation inside the timed section
         f
       }
       val (go, gd) = groupsLatency.time {
-        val go = goSource()
+        val go = hold(goSource())
         val gd = Snapshots.groupsDim(spark, sfDir)
         go.count(); gd.count()
         (go, gd)
       }
+      snapshot = TickSnapshot(wm, go, gd)
       val labels = Seq("cluster" -> cluster.name)
       val text = MetricsExposition.exposition(
         TopicAnalytics.clusterTotals(wm, gd),
         GroupAnalytics.groupTopicLag(wm, go),
-        SchemaRegistryOps.counts(Snapshots.srSubjects(spark, sfDir),
-          wm.filter(org.apache.spark.sql.functions.col("s") === Snapshots.NumScans)),
+        SchemaRegistryOps.counts(Snapshots.srSubjects(spark, sfDir), snapshot.latest),
         Deltas.partitionDeltas(wm),
         lagTrend = Some(GroupAnalytics.lagTrend(wm, go))) +
         topicsLatency.render(labels) + "\n" +
@@ -152,17 +184,14 @@ object GraftApp {
       http.foreach(_.update(text))
     }
 
+    // the report describes the snapshot this tick's scan just took
     def report(): Unit = {
-      val wm = Scheduler.applyTopicFilters(wmSource(),
-        cluster.topicIncludeRegexes, cluster.topicExcludeRegexes)
-      val go = goSource()
-      val gd = Snapshots.groupsDim(spark, sfDir)
-      val topics = TopicAnalytics.topicsDf(wm, go, gd)
-      val groups = GroupAnalytics.groupsDf(wm, go, gd)
+      val TickSnapshot(wm, go, gd) = snapshot
+      val topics = hold(TopicAnalytics.topicsDf(wm, go, gd))
+      val groups = hold(GroupAnalytics.groupsDf(wm, go, gd))
       val gov = cluster.governance
       val rpt = ClusterReporting.clusterReport(cluster.name, topics, groups,
-        Snapshots.srSubjects(spark, sfDir),
-        wm.filter(org.apache.spark.sql.functions.col("s") === Snapshots.NumScans),
+        Snapshots.srSubjects(spark, sfDir), snapshot.latest,
         java.time.Instant.now(),
         topicCompliant = if (gov.topicCompliantRegexes.nonEmpty)
           gov.topicCompliantRegexes else graft.operators.Governance.DefaultCompliant,
@@ -191,6 +220,7 @@ object GraftApp {
         java.time.Instant.now().toString, reportUrl)
     }
 
-    loop.loop(() => scan(), () => report(), Some(ticks))
+    try loop.loop(() => scan(), () => report(), Some(ticks))
+    finally release()
   }
 }

@@ -1,6 +1,6 @@
 package graft.metrics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Prometheus-style metric surface (K4 / SURVEY §2.8): the reference's
@@ -16,13 +16,19 @@ object MetricsExposition {
 
   /** One gauge family from a DataFrame: label columns + one value column. */
   def gauge(name: String, help: String, df: DataFrame,
-            labels: Seq[String], value: String): String = {
-    val rows = df.select((labels :+ value).map(col): _*).collect()
+            labels: Seq[String], value: String): String =
+    gaugeRows(name, help, df.select((labels :+ value).map(col): _*).collect().toSeq,
+      labels, value)
+
+  /** One gauge family from collected rows, read by column name, so that
+    * several families can share one collect of the same frame. */
+  private def gaugeRows(name: String, help: String, rows: Seq[Row],
+                        labels: Seq[String], value: String): String = {
     val lines = rows.map { r =>
-      val ls = labels.zipWithIndex
-        .map { case (l, i) => s"""$l="${esc(String.valueOf(r.get(i)))}"""" }
+      val ls = labels
+        .map(l => s"""$l="${esc(String.valueOf(r.get(r.fieldIndex(l))))}"""")
         .mkString(",")
-      val v = r.get(labels.size) match {
+      val v = r.get(r.fieldIndex(value)) match {
         case null => "NaN"
         case n: Number => n.toString
         case other => other.toString
@@ -46,10 +52,16 @@ object MetricsExposition {
   /** The reference's full cluster gauge catalog in one exposition document:
     * cluster totals (A5), per-(group, topic) lag (A3), SR counts (A11),
     * per-partition new-message deltas (W1, exposed as a gauge of the last
-    * interval). */
+    * interval). Each frame is collected once: the three cluster-total
+    * families share one collect of `clusterTotals`, the two registry
+    * families one collect of `srCounts`. */
   def exposition(clusterTotals: DataFrame, groupTopicLag: DataFrame,
                  srCounts: DataFrame, partitionDeltas: DataFrame,
                  lagTrend: Option[DataFrame] = None): String = {
+    val totals = clusterTotals.select(col("cluster"), col("topics_count"),
+      col("partitions_count"), col("consumer_groups_count")).collect().toSeq
+    val sr = srCounts.select(col("registry"), col("subjects_count"),
+      col("schemas_count")).collect().toSeq
     val latestDelta = partitionDeltas
       .groupBy(col("cluster"), col("topic"), col("partition_id"))
       .agg(max_by(col("delta"), col("scan_ts")).as("delta"))
@@ -61,18 +73,18 @@ object MetricsExposition {
         "Lag least-squares slope over the scan history (positive = falling behind)",
         t, Seq("cluster", "grp", "topic"), "slope")).toSeq
     (Seq(
-      gauge("kafka_overwatch_cluster_topics_count", "Total topics per cluster",
-        clusterTotals, Seq("cluster"), "topics_count"),
-      gauge("kafka_overwatch_cluster_partitions_count", "Total partitions per cluster",
-        clusterTotals, Seq("cluster"), "partitions_count"),
-      gauge("kafka_overwatch_cluster_consumer_groups_count", "Total consumer groups per cluster",
-        clusterTotals, Seq("cluster"), "consumer_groups_count"),
+      gaugeRows("kafka_overwatch_cluster_topics_count", "Total topics per cluster",
+        totals, Seq("cluster"), "topics_count"),
+      gaugeRows("kafka_overwatch_cluster_partitions_count", "Total partitions per cluster",
+        totals, Seq("cluster"), "partitions_count"),
+      gaugeRows("kafka_overwatch_cluster_consumer_groups_count", "Total consumer groups per cluster",
+        totals, Seq("cluster"), "consumer_groups_count"),
       gauge("kafka_overwatch_consumer_group_lag", "Total lag per group and topic",
         groupTopicLag, Seq("cluster", "grp", "topic"), "total_lag"),
-      gauge("kafka_overwatch_subjects_count", "Schema registry subjects",
-        srCounts, Seq("registry"), "subjects_count"),
-      gauge("kafka_overwatch_schemas_count", "Schema registry schemas",
-        srCounts, Seq("registry"), "schemas_count"),
+      gaugeRows("kafka_overwatch_subjects_count", "Schema registry subjects",
+        sr, Seq("registry"), "subjects_count"),
+      gaugeRows("kafka_overwatch_schemas_count", "Schema registry schemas",
+        sr, Seq("registry"), "schemas_count"),
       gauge("kafka_overwatch_topic_partition_new_messages", "New messages in the last scan interval",
         latestDelta, Seq("cluster", "topic", "partition_id"), "delta"))
       ++ trendGauge)

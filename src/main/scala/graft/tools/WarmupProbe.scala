@@ -25,13 +25,15 @@ object WarmupProbe {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark.range(1000000L).selectExpr("sum(id * 2)").collect()
     val t0 = System.nanoTime()
-    val (wall, cpu) = graft.SparkEntry.warmupAttributed(spark, dir)
+    val graft.SparkEntry.WarmupProfile(wall, cpu, run) =
+      graft.SparkEntry.warmupProfile(spark, dir)
     val makespan = (System.nanoTime() - t0) / 1e9
     val cpuMap = cpu.toMap
+    val runMap = run.toMap
     println(f"[warmup_probe] makespan=$makespan%.2fs threads=" +
       sys.env.getOrElse("SPARK_GRAFT_WARMUP_THREADS", "auto"))
     wall.foreach { case (n, w) =>
-      println(f"[warmup_probe] $n%-20s wall=$w%8.2fs cpu=${cpuMap(n)}%8.2fs")
+      println(f"[warmup_probe] $n%-20s wall=$w%8.2fs cpu=${cpuMap(n)}%8.2fs run=${runMap(n)}%8.2fs")
     }
     spark.stop()
   }

@@ -127,6 +127,103 @@ class AppSpec extends AnyFunSuite {
       java.nio.file.Paths.get(s"$out/report_c1.json")))
   }
 
+  test("exposition matches the per-family gauge documents, family by family") {
+    import org.apache.spark.sql.functions.{col, max_by}
+    val dir = TestSpark.Sf0001
+    val wm = Snapshots.watermarks(spark, dir)
+    val go = Snapshots.groupOffsets(spark, dir)
+    val totals = TopicAnalytics.clusterTotals(wm, Snapshots.groupsDim(spark, dir))
+    val lag = GroupAnalytics.groupTopicLag(wm, go)
+    val sr = graft.operators.SchemaRegistryOps.counts(Snapshots.srSubjects(spark, dir),
+      wm.filter(col("s") === Snapshots.NumScans))
+    val deltas = Deltas.partitionDeltas(wm)
+    val trend = GroupAnalytics.lagTrend(wm, go)
+    val latestDelta = deltas.groupBy(col("cluster"), col("topic"), col("partition_id"))
+      .agg(max_by(col("delta"), col("scan_ts")).as("delta"))
+    import MetricsExposition.gauge
+    val expected = Seq(
+      gauge("kafka_overwatch_cluster_topics_count", "Total topics per cluster",
+        totals, Seq("cluster"), "topics_count"),
+      gauge("kafka_overwatch_cluster_partitions_count", "Total partitions per cluster",
+        totals, Seq("cluster"), "partitions_count"),
+      gauge("kafka_overwatch_cluster_consumer_groups_count", "Total consumer groups per cluster",
+        totals, Seq("cluster"), "consumer_groups_count"),
+      gauge("kafka_overwatch_consumer_group_lag", "Total lag per group and topic",
+        lag, Seq("cluster", "grp", "topic"), "total_lag"),
+      gauge("kafka_overwatch_subjects_count", "Schema registry subjects",
+        sr, Seq("registry"), "subjects_count"),
+      gauge("kafka_overwatch_schemas_count", "Schema registry schemas",
+        sr, Seq("registry"), "schemas_count"),
+      gauge("kafka_overwatch_topic_partition_new_messages", "New messages in the last scan interval",
+        latestDelta, Seq("cluster", "topic", "partition_id"), "delta"),
+      gauge("kafka_overwatch_consumer_group_lag_slope",
+        "Lag least-squares slope over the scan history (positive = falling behind)",
+        trend, Seq("cluster", "grp", "topic"), "slope")).mkString("\n") + "\n"
+    val got = MetricsExposition.exposition(totals, lag, sr, deltas, lagTrend = Some(trend))
+    assert(got === expected)
+  }
+
+  test("runCluster releases the frames its ticks persisted and keeps the snapshot memo") {
+    import org.apache.spark.storage.StorageLevel
+    import graft.sources.SnapshotLake
+    val dir = TestSpark.Sf0001
+    def cached(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.storageLevel != StorageLevel.NONE // a cacheManager lookup by plan
+    // probes the cache from inside a tick: the report notifies its
+    // channels after its last export
+    final class Probe(frames: () => Seq[org.apache.spark.sql.DataFrame])
+        extends app.Notifications.Channel {
+      val name = "probe"
+      var seen = Vector.empty[Seq[Boolean]]
+      def publish(m: app.Notifications.Message): Unit = seen :+= frames().map(cached)
+    }
+    // a zero evaluation period: every tick reports
+    val cfg = app.ClusterConfig("c1",
+      reporting = app.ReportingConfig(evaluationPeriodSeconds = 0L))
+
+    // an isolated session with its own memo: the cache manager is shared
+    // by every session of the context and matches by plan, so another
+    // suite invalidating its memo can uncache the shared session's
+    val s = TestSpark.spark.newSession()
+    TestSpark.spark.conf.getAll.foreach { case (k, v) =>
+      if (s.conf.isModifiable(k)) s.conf.set(k, v)
+    }
+    // fixture mode: the tick's watermarks and offsets are the memoized
+    // Snapshots frames, which must stay cached through and after the ticks
+    assert(cached(Snapshots.watermarks(s, dir)) && cached(Snapshots.groupOffsets(s, dir)))
+    val memoProbe = new Probe(() => Snapshots.cachedFrames(s, dir))
+    graft.app.GraftApp.runCluster(s, cfg, dir,
+      java.nio.file.Files.createTempDirectory("graft-app-memo").toString,
+      ticks = 2, channels = Seq(memoProbe))
+    val memo = Snapshots.cachedFrames(s, dir)
+    assert(memo.exists(_ eq Snapshots.watermarks(s, dir)))
+    assert(memo.exists(_ eq Snapshots.groupOffsets(s, dir)))
+    assert(memo.forall(cached), "a tick released a memoized snapshot frame")
+    assert(memoProbe.seen.size === 2 && memoProbe.seen.forall(_.forall(identity)))
+
+    // lake mode: the tick persists the frames it reads from the lake and
+    // derives for the report, and releases every one of them on return
+    val lake = java.nio.file.Files.createTempDirectory("graft-lake-lifecycle").toString
+    SnapshotLake.writeWatermarks(Snapshots.watermarks(s, dir), s"$lake/watermarks")
+    SnapshotLake.writeGroupOffsets(Snapshots.groupOffsets(s, dir), s"$lake/group_offsets")
+    // the same plans the tick builds (ClusterConfig defaults: no topic filters)
+    def tickFrames(): Seq[org.apache.spark.sql.DataFrame] = {
+      val wm = SnapshotLake.readWatermarks(s, s"$lake/watermarks")
+      val go = SnapshotLake.readGroupOffsets(s, s"$lake/group_offsets")
+      val gd = Snapshots.groupsDim(s, dir)
+      Seq(wm, go, TopicAnalytics.topicsDf(wm, go, gd), GroupAnalytics.groupsDf(wm, go, gd))
+    }
+    assert(!tickFrames().exists(cached))
+    val lakeProbe = new Probe(() => tickFrames())
+    graft.app.GraftApp.runCluster(s, cfg, dir,
+      java.nio.file.Files.createTempDirectory("graft-app-lake-lifecycle").toString,
+      ticks = 2, channels = Seq(lakeProbe), lakeDir = Some(lake))
+    assert(lakeProbe.seen === Vector.fill(2)(Seq(true, true, true, true)),
+      "the tick did not hold its snapshot and report frames")
+    assert(!tickFrames().exists(cached), "a tick frame outlived runCluster")
+    assert(memo.forall(cached))
+  }
+
   test("lake mode: app IO reads the partitioned lake with pruned scans") {
     import graft.sources.SnapshotLake
     val lake = java.nio.file.Files.createTempDirectory("graft-lake-app").toString
