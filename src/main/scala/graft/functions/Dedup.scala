@@ -212,7 +212,8 @@ object Dedup {
     edges.unpersist(false)
     // the final round's persisted RDD backs the returned frame; its
     // blocks release via the ContextCleaner once callers drop the
-    // reference (the clustersMemo contract in SparkEntry.invalidate)
+    // reference (Storage.SelfManaged, the dedupClusters declaration's
+    // policy in SparkEntry)
     val rows = labels.map { case (id, l) =>
       org.apache.spark.sql.Row(id, l, id == l)
     }

@@ -80,9 +80,9 @@ object TopicAnalytics {
   /** A12: explicit existence aggregates per topic — has_new_messages =
     * any partition advanced since baseline, has_active_groups = any
     * attached group is active (reference Topic.has_* methods,
-    * overwatch_resources/topics.py:117-121,193-204). */
-  def topicFlags(wm: DataFrame, go: DataFrame, gd: DataFrame): DataFrame =
-    topicsDf(wm, go, gd).select(col("cluster"), col("name"),
+    * overwatch_resources/topics.py:117-121,193-204), over a [[topicsDf]]. */
+  def topicFlags(topics: DataFrame): DataFrame =
+    topics.select(col("cluster"), col("name"),
       (col("new_messages") > 0).as("has_new_messages"),
       (col("active_groups") > 0).as("has_active_groups"))
 

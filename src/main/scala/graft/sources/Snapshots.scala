@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Derivation, Derivations, Storage, Warm}
+import org.apache.spark.storage.StorageLevel
 
 /** Deterministic snapshot fixtures derived from the driver's parquet tables.
   *
@@ -140,61 +142,54 @@ object Snapshots {
     (1 to NumScans).map(_.toLong).toDF("s")
   }
 
-  /** Per-session memo of derived snapshot tables: within one process the
-    * driver (Verify/Bench) runs many queries over the same snapshot set;
-    * deriving + persisting once turns the shared derivation into a cached
-    * in-memory columnar scan for every later query. Entries live for the
-    * session lifetime (bounded: a handful of tiny tables per sf dir). */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def memoize(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((spark, key), build.persist())
-
-  /** Unpersist + drop every snapshot table memoized for (session, dir)
-    * — every memo key ends with "|dir". Called by SparkEntry.invalidate
-    * so the service loop releases a snapshot dir's cached blocks when it
-    * moves on (r8 verdict item 2). */
-  def invalidate(spark: SparkSession, dir: String): Unit =
-    memo.keys.filter(k => k._1 == spark && k._2.endsWith("|" + dir))
-      .foreach(k => memo.remove(k).foreach(_.unpersist()))
+  /** The derived snapshot tables, one declaration each: within one process
+    * the driver (Verify/Bench) runs many queries over the same snapshot
+    * set, so each table is derived and persisted once per (session, dir).
+    * The raw tables (watermarks and their event counts, group offsets,
+    * groups) have no warmup task of their own: the first analytic table
+    * that reads them materializes them. */
+  private[graft] val derivations = new Derivations()
 
   private[graft] def cachedFrames(spark: SparkSession, dir: String): Seq[DataFrame] =
-    memo.collect { case ((s, k), df) if s == spark && k.endsWith("|" + dir) => df }.toSeq
+    derivations.cachedFrames(spark, dir)
 
-  /** All memo keys held for a session, ANY dir — the soak spec's
-    * zero-net-growth probe. */
-  private[graft] def memoKeyCount(spark: SparkSession): Int =
-    memo.keys.count(_._1 == spark)
+  /** Events per (topic, partition, first visible scan): the one grouped
+    * pass over events, tiny (pairs x scans upper bound), read twice by the
+    * watermarks below. Each event is visible from scan s_min =
+    * ceil(NumScans*e/maxid) on (equivalent to e <= maxid*s div NumScans),
+    * so per-scan highs are a cumulative sum over this pass — no events x
+    * scans explosion. The DuckDB oracle keeps the crossJoin formulation;
+    * the two are arithmetically identical. */
+  private val watermarkCounts: Derivation[DataFrame] = derivations(
+    "watermarkCounts", Nil, Storage.MemoryAndDisk, (spark, dir) => {
+      import spark.implicits._
+      // one narrow scan for the max id, one wide scan for the counts
+      val ev = events(spark, dir)
+      val mx = ev.agg(max($"event_id").as("maxid"))
+      ev.crossJoin(broadcast(mx))
+        .withColumn("s_min",
+          greatest(expr(s"(event_id * $NumScans + maxid - 1) div maxid"), lit(1L)))
+        .groupBy($"topic", $"partition_id", $"s_min").agg(count(lit(1)).as("c"))
+    }, Warm.Inner)
 
   /** partition_watermarks: (cluster, topic, partition_id, low, high, scan_ts, s).
-    * Reference: Partition watermark fetch, kafka_overwatch/kafka_resources/topics.py:168-209. */
-  def watermarks(spark: SparkSession, dir: String): DataFrame =
-    memoize(spark, s"wm|$dir")(watermarksUncached(spark, dir))
+    * Reference: Partition watermark fetch, kafka_overwatch/kafka_resources/topics.py:168-209.
+    * Computed on build (`eager`): the joins of every table derived from it
+    * are planned from its real size. */
+  val watermarks: Derivation[DataFrame] = derivations("watermarks",
+    Seq(watermarkCounts), Storage.Persisted(StorageLevel.MEMORY_AND_DISK, eager = true),
+    watermarksUncached, Warm.Inner)
 
   private def watermarksUncached(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // Two passes over events, not three: one narrow scan for the max id,
-    // one wide scan for the grouped counts; the distinct (topic,
-    // partition) pairs fall out of the (tiny) grouped result for free.
-    val ev    = events(spark, dir)
-    val mx    = ev.agg(max($"event_id").as("maxid"))
-    val scans = scansDf(spark)
-    // Each event is visible from scan s_min = ceil(NumScans*e/maxid) on
-    // (equivalent to e <= maxid*s div NumScans), so per-scan highs are a
-    // cumulative sum over one grouped pass of events — no events x scans
-    // explosion. The DuckDB oracle keeps the crossJoin formulation; the
-    // two are arithmetically identical.
-    val byFirstScan = ev.crossJoin(broadcast(mx))
-      .withColumn("s_min",
-        greatest(expr(s"(event_id * $NumScans + maxid - 1) div maxid"), lit(1L)))
-      .groupBy($"topic", $"partition_id", $"s_min").agg(count(lit(1)).as("c"))
-      .persist() // tiny (pairs x scans upper bound); read by both branches
+    // the distinct (topic, partition) pairs fall out of the (tiny) grouped
+    // counts for free
+    val byFirstScan = watermarkCounts(spark, dir)
     val pairs = byFirstScan.select($"topic", $"partition_id").distinct()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"topic", $"partition_id").orderBy($"s")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val derived = pairs.crossJoin(broadcast(scans))
+    val derived = pairs.crossJoin(broadcast(scansDf(spark)))
       .join(byFirstScan.withColumnRenamed("s_min", "s"),
         Seq("topic", "partition_id", "s"), "left")
       .withColumn("high", sum(coalesce($"c", lit(0L))).over(w))
@@ -202,20 +197,16 @@ object Snapshots {
       .select($"topic", $"partition_id", $"s", $"low", $"high")
     val injected = InjectedWatermarkRows
       .toDF("topic", "partition_id", "s", "low", "high")
-    val out = derived.unionByName(injected)
+    derived.unionByName(injected)
       .select(clusterOf($"topic").as("cluster"), $"topic", $"partition_id", $"low",
         $"high", (lit(Epoch0) + lit(Step) * $"s").as("scan_ts"), $"s")
-      .persist()
-    out.count() // materialize, then release the intermediate
-    byFirstScan.unpersist()
-    out
   }
 
   /** group_offsets: (cluster, grp, topic, partition_id, committed, scan_ts, s).
     * Reference: committed-offset fetch, kafka_overwatch/kafka_resources/groups.py:149-170.
     * committed = -1 means "no committed offset" (groups.py:121-130, quirk Q3). */
-  def groupOffsets(spark: SparkSession, dir: String): DataFrame =
-    memoize(spark, s"go|$dir")(groupOffsetsUncached(spark, dir))
+  val groupOffsets: Derivation[DataFrame] = derivations("groupOffsets",
+    Seq(watermarks), Storage.MemoryAndDisk, groupOffsetsUncached, Warm.Inner)
 
   private def groupOffsetsUncached(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -236,37 +227,14 @@ object Snapshots {
     * Reference: ConsumerGroupDescription, kafka_overwatch/kafka_resources/groups.py:74-108.
     * is_active semantics (state not DEAD/EMPTY and members > 0):
     * overwatch_resources/groups.py:79-85. */
-  def groupsDim(spark: SparkSession, dir: String): DataFrame =
-    memoize(spark, s"gd|$dir")(groupsDimUncached(spark, dir))
+  val groupsDim: Derivation[DataFrame] = derivations("groupsDim", Nil,
+    Storage.MemoryAndDisk, groupsDimUncached, Warm.Inner)
 
   private def groupsDimUncached(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Clusters.flatMap(c => GroupDimRows.map { case (g, st, m, s) =>
       (c, g, st, m, Epoch0 + Step * s, s)
     }).toDF("cluster", "grp", "state", "member_count", "scan_ts", "s")
-  }
-
-  /** topic_configs: (cluster, topic, key, value, is_default) — one row per
-    * config entry, relational form of Topic.config
-    * (reference: overwatch_resources/topics.py:147-155). */
-  def topicConfigs(spark: SparkSession, dir: String): DataFrame =
-    memoize(spark, s"tc|$dir")(topicConfigsUncached(spark, dir))
-
-  private def topicConfigsUncached(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val topics = watermarks(spark, dir).select($"cluster", $"topic").distinct()
-    val keys = Seq("retention.ms", "cleanup.policy", "segment.bytes").toDF("key")
-    topics.crossJoin(broadcast(keys))
-      .withColumn("value",
-        when($"key" === "retention.ms",
-          when(length($"topic") > 5, lit("86400000")).otherwise(lit("604800000")))
-          .when($"key" === "cleanup.policy",
-            when($"topic" === "click", lit("compact")).otherwise(lit("delete")))
-          .otherwise(lit("1073741824")))
-      .withColumn("is_default",
-        when($"key" === "retention.ms", length($"topic") <= 5)
-          .when($"key" === "cleanup.policy", $"topic" =!= "click")
-          .otherwise(lit(true)))
   }
 
   /** Registry serving a topic's cluster — the fleet runs TWO schema
@@ -285,8 +253,8 @@ object Snapshots {
     * on its cluster's registry (registryOf), plus literal subjects
     * exercising `-key`, orphaned, and no-suffix cases
     * for the unused-subject anti-join (reporting/schema_registry.py:22-27). */
-  def srSubjects(spark: SparkSession, dir: String): DataFrame =
-    memoize(spark, s"sr|$dir")(srSubjectsUncached(spark, dir))
+  val srSubjects: Derivation[DataFrame] = derivations("srSubjects",
+    Seq(watermarks), Storage.MemoryAndDisk, srSubjectsUncached)
 
   private def srSubjectsUncached(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -306,5 +274,28 @@ object Snapshots {
     val injected = SrInjectedRows
       .toDF("registry", "subject", "version", "schema_id", "schema_type", "schema_string")
     derived.unionByName(injected)
+  }
+
+  /** topic_configs: (cluster, topic, key, value, is_default) — one row per
+    * config entry, relational form of Topic.config
+    * (reference: overwatch_resources/topics.py:147-155). */
+  val topicConfigs: Derivation[DataFrame] = derivations("topicConfigs",
+    Seq(watermarks), Storage.MemoryAndDisk, topicConfigsUncached)
+
+  private def topicConfigsUncached(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val topics = watermarks(spark, dir).select($"cluster", $"topic").distinct()
+    val keys = Seq("retention.ms", "cleanup.policy", "segment.bytes").toDF("key")
+    topics.crossJoin(broadcast(keys))
+      .withColumn("value",
+        when($"key" === "retention.ms",
+          when(length($"topic") > 5, lit("86400000")).otherwise(lit("604800000")))
+          .when($"key" === "cleanup.policy",
+            when($"topic" === "click", lit("compact")).otherwise(lit("delete")))
+          .otherwise(lit("1073741824")))
+      .withColumn("is_default",
+        when($"key" === "retention.ms", length($"topic") <= 5)
+          .when($"key" === "cleanup.policy", $"topic" =!= "click")
+          .otherwise(lit(true)))
   }
 }

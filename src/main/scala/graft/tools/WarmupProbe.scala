@@ -7,11 +7,11 @@ import org.apache.spark.sql.SparkSession
   * warmup-growth questions (the r14 x128 artifact recorded
   * excisionSpans at 6.2x its x64 wall under the concurrent pool; this
   * probe separates the derivation's own cost from pool-neighbor
-  * contention: run it with SPARK_GRAFT_WARMUP_THREADS=1 for sequential
-  * walls, or default-concurrent to see the CPU map stay flat while
-  * walls wander). Usage:
+  * contention: the executor CPU map stays flat while walls wander with
+  * what ran beside each derivation). The pool runs max(1, min(8,
+  * cores / 4)) threads. Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
-  *     [SPARK_GRAFT_WARMUP_THREADS=1] sbt "runMain graft.tools.WarmupProbe"
+  *     sbt "runMain graft.tools.WarmupProbe"
   */
 object WarmupProbe {
   def main(args: Array[String]): Unit = {
@@ -30,8 +30,8 @@ object WarmupProbe {
     val makespan = (System.nanoTime() - t0) / 1e9
     val cpuMap = cpu.toMap
     val runMap = run.toMap
-    println(f"[warmup_probe] makespan=$makespan%.2fs threads=" +
-      sys.env.getOrElse("SPARK_GRAFT_WARMUP_THREADS", "auto"))
+    println(f"[warmup_probe] makespan=$makespan%.2fs " +
+      s"threads=${graft.SparkEntry.warmupThreads(spark)}")
     wall.foreach { case (n, w) =>
       println(f"[warmup_probe] $n%-20s wall=$w%8.2fs cpu=${cpuMap(n)}%8.2fs run=${runMap(n)}%8.2fs")
     }
