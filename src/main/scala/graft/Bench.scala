@@ -1,43 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
-/** Per-stage task-metric totals, accumulated by [[ProfListener]] and
-  * diffed around each query so a bench run can attribute time to GC,
-  * spill, and shuffle instead of guessing (the x128 rung showed >3x
-  * growth on row-local queries — "consistent with spill" needed to
-  * become a measurement). */
-private case class ProfSnap(runMs: Long, gcMs: Long, memSpill: Long,
-                            diskSpill: Long, shufRead: Long, shufWrite: Long) {
-  def -(o: ProfSnap): ProfSnap = ProfSnap(runMs - o.runMs, gcMs - o.gcMs,
-    memSpill - o.memSpill, diskSpill - o.diskSpill,
-    shufRead - o.shufRead, shufWrite - o.shufWrite)
-  def fmt: String =
-    f"run=${runMs / 1000.0}%.1fs gc=${gcMs / 1000.0}%.1fs " +
-      f"spillMem=${memSpill / 1e9}%.2fGB spillDisk=${diskSpill / 1e9}%.2fGB " +
-      f"shufR=${shufRead / 1e9}%.2fGB shufW=${shufWrite / 1e9}%.2fGB"
-}
-
-private class ProfListener extends SparkListener {
-  @volatile private var runMs = 0L
-  @volatile private var gcMs = 0L
-  @volatile private var memSpill = 0L
-  @volatile private var diskSpill = 0L
-  @volatile private var shufRead = 0L
-  @volatile private var shufWrite = 0L
-  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-    synchronized {
-      val m = sc.stageInfo.taskMetrics
-      runMs += m.executorRunTime
-      gcMs += m.jvmGCTime
-      memSpill += m.memoryBytesSpilled
-      diskSpill += m.diskBytesSpilled
-      shufRead += m.shuffleReadMetrics.totalBytesRead
-      shufWrite += m.shuffleWriteMetrics.bytesWritten
-    }
-  def snap(): ProfSnap = synchronized(
-    ProfSnap(runMs, gcMs, memSpill, diskSpill, shufRead, shufWrite))
-}
+import graft.tools.ProfListener
 
 object Bench {
   /** Measurement-protocol version stamped into every sidecar, so a
@@ -188,15 +151,7 @@ object Bench {
       case Some(l) =>
         val before = l.snap()
         val r = body
-        // stage-completion events arrive async (listener bus is
-        // private[spark]): poll until the totals stop moving
-        var last = l.snap(); var stable = false; var waited = 0
-        while (!stable && waited < 2000) {
-          Thread.sleep(50); waited += 50
-          val now = l.snap()
-          if (now == last) stable = true else last = now
-        }
-        System.err.println(s"[prof] $name ${(l.snap() - before).fmt} " +
+        System.err.println(s"[prof] $name ${(l.settled() - before).fmt} " +
           s"heapUsed=${(Runtime.getRuntime.totalMemory() -
             Runtime.getRuntime.freeMemory()) / (1 << 20)}MB")
         r

@@ -70,10 +70,10 @@ object SparkEntry {
     * Bucket width comes from the AtScale switchboard (default 4 bits = the
     * oracle-parity geometry; at scale bits must grow ~log2(corpus) to
     * keep bucket population — and with it candidate PRECISION — flat,
-    * the r9 CosineProbe finding). The key carries the RESOLVED width (r9
-    * ADVICE: keying on (session, dir) alone served the stale-geometry
-    * pair set after a mid-session spark.graft.lsh.bitsPerTable change
-    * until invalidate). */
+    * the r9 finding, NOTES.md "Round 9" item 10). The key carries the
+    * RESOLVED width (r9 ADVICE: keying on (session, dir) alone served the
+    * stale-geometry pair set after a mid-session
+    * spark.graft.lsh.bitsPerTable change until invalidate). */
   private val scoredBucketPairs = derivations("scoredBucketPairs", Nil,
     Storage.MemoryAndDisk,
     (s, dir) => Similarity.scoredBucketPairs(emb(s, dir),
@@ -202,12 +202,18 @@ object SparkEntry {
   private val bpeMerges = derivations("bpeMerges", Nil, Storage.Driver(),
     (s, dir) => TextAnalytics.fitBpeMerges(docs(s, dir)))
 
-  /** The shared PQ codebook (q_knn_pq) — 16 x 8 doubles of driver state. */
-  private val pqCodebook = derivations("pqCodebook", Nil, Storage.Driver(),
-    (s, dir) => functions.Pq.trainCodebook(emb(s, dir)))
+  /** The PQ training subvectors both codebook trainers read every Lloyd
+    * round; held until invalidate, so neither trainer releases the other's
+    * input. */
+  private val pqTraining = derivations("pqTraining", Nil, Storage.MemoryAndDisk,
+    (s, dir) => functions.Pq.trainingSubvectors(emb(s, dir)), Warm.Inner)
 
-  private val pqSubCodebooks = derivations("pqSubCodebooks", Nil,
-    Storage.Driver(), (s, dir) => functions.Pq.trainCodebooks(emb(s, dir)))
+  /** The shared PQ codebook (q_knn_pq) — 16 x 8 doubles of driver state. */
+  private val pqCodebook = derivations("pqCodebook", Seq(pqTraining),
+    Storage.Driver(), (s, dir) => functions.Pq.fitCodebook(pqTraining(s, dir)))
+
+  private val pqSubCodebooks = derivations("pqSubCodebooks", Seq(pqTraining),
+    Storage.Driver(), (s, dir) => functions.Pq.fitCodebooks(pqTraining(s, dir)))
 
   /** The OPQ config (q_ann_recall): the variance-balanced dimension
     * permutation plus per-subspace codebooks trained in the permuted
@@ -216,9 +222,12 @@ object SparkEntry {
     Storage.Driver(), (s, dir) => functions.Pq.trainPermutation(emb(s, dir)),
     Warm.Inner)
 
-  private val opqCodebooks = derivations("opqCodebooks", Seq(opqPermutation),
-    Storage.Driver(), (s, dir) => functions.Pq.trainCodebooks(
-      functions.Pq.permute(emb(s, dir), opqPermutation(s, dir))))
+  private val opqTraining = derivations("opqTraining", Seq(opqPermutation),
+    Storage.MemoryAndDisk, (s, dir) => functions.Pq.trainingSubvectors(
+      functions.Pq.permute(emb(s, dir), opqPermutation(s, dir))), Warm.Inner)
+
+  private val opqCodebooks = derivations("opqCodebooks", Seq(opqTraining),
+    Storage.Driver(), (s, dir) => functions.Pq.fitCodebooks(opqTraining(s, dir)))
 
   /** A corpus dir's dirty-fixture table when the generator materialized
     * one, else the query-time derivation (r12 verdict item 6): the
@@ -1231,7 +1240,7 @@ object SparkEntry {
       s.sparkContext.setJobDescription(null)
     }
     // stage-completion events arrive async: poll until the run-time
-    // totals stop moving (the Bench ProfListener protocol), bounded at 2 s
+    // totals stop moving, bounded at 2 s (as tools.ProfListener.settled)
     def runTotal: Long = runMs.values.stream.mapToLong(_.longValue).sum
     var last = runTotal
     var waited = 0

@@ -17,8 +17,8 @@ import org.apache.spark.sql.graft.ColumnBridge
   * `array_max(array(struct(score, code)))` tree this replaces, whose
   * per-arm expression weight (NumSub x CodebookK codeword dots inlined
   * as Catalyst nodes) dominated q_ann_recall's construction/codegen
-  * cost (r14 AnnProbe; r15 measured the cold-vs-warm gap at ~1.5 s
-  * across the three ADC arms).
+  * cost (OPTIMIZATION_r14.md §7; OPTIMIZATION_r15.md §4 measured the
+  * cold-vs-warm gap at ~1.5 s across the three ADC arms).
   *
   * Arithmetic is bit-compatible with the literal path: the dot is the
   * same ascending sequential fold in double over min(|sub|, |cw|)

@@ -41,8 +41,8 @@ object AtScale {
   def annSampleMod(ds: Dataset[_]): Int =
     ds.sparkSession.conf.get(AnnSampleModKey, "1").toInt
 
-  /** LSH bucket width for the embedding pair family (r9 CosineProbe
-    * finding): buckets per table are 2^bits, so at FIXED bits bucket
+  /** LSH bucket width for the embedding pair family (r9 finding,
+    * NOTES.md "Round 9" item 10): buckets per table are 2^bits, so at FIXED bits bucket
     * population grows linearly with the corpus and the candidate set —
     * anchor-capped to stay linear in VOLUME — degrades in PRECISION
     * (x128 measured: 98% of candidates were cross-replica, i.e.

@@ -85,7 +85,7 @@ object Dedup {
     */
   /** Below this many distinct undirected edges the label loop is pure
     * scheduling overhead (~5 RDD jobs x ~0.2 s per round for microseconds
-    * of work — AdmProbe r14), and the component structure fits the
+    * of work — OPTIMIZATION_r14.md §2), and the component structure fits the
     * driver many times over: <= 500k skinny Long pairs is <= ~8 MB raw —
     * the same order the engine already ships driver-side for every
     * broadcast join. The constant is the loop's own per-partition edge
@@ -109,7 +109,8 @@ object Dedup {
     // the edge table is partitioned ONCE and persisted; every round's
     // neighbor join reads it in place (no per-round edge shuffle). The
     // distinct rides the same partitioner. Floor 1, not 8: below ~500k
-    // edges extra tasks are pure scheduling overhead (AdmProbe), and at
+    // edges extra tasks are pure scheduling overhead (OPTIMIZATION_r14.md
+    // §2), and at
     // scale the width tracks the edge count exactly as before.
     val prePartitioner = new org.apache.spark.HashPartitioner(
       math.max(1, math.min(sessionParts, 512)).toInt)

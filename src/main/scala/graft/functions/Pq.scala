@@ -73,7 +73,8 @@ object Pq {
       // typedLit: ONE literal node per codeword (not SubDim `lit`s) —
       // same array value, ~4x smaller expression tree per code column
       // (r14: DataFrame CONSTRUCTION, i.e. repeated Catalyst analysis
-      // of these trees, dominated q_ann_recall's wall — AnnProbe)
+      // of these trees, dominated q_ann_recall's wall —
+      // OPTIMIZATION_r14.md §7)
       struct(
         (lit(2.0) * Similarity.dot(sub, typedLit(c.toIndexedSeq))
           - lit(cn2)).as("score"),
@@ -92,7 +93,8 @@ object Pq {
     * the same order, same round(.., 9)), but the expression tree drops
     * from ~1.4k nodes (10 queries x 128 lits + folds) to ~40, which is
     * what repeated Catalyst analysis during plan construction actually
-    * costs (guide §7.3 "very large plans"; measured in AnnProbe). */
+    * costs (guide §7.3 "very large plans"; measured in
+    * OPTIMIZATION_r14.md §7). */
   private def adcTopK(withCodes: DataFrame, rq: Column,
       luts: Array[(Long, Double, Array[Long])], k: Int): DataFrame = {
     val qids  = typedLit(luts.map(_._1).toIndexedSeq)
@@ -122,49 +124,52 @@ object Pq {
         col("rank").cast("long").as("rank"), col("score"))
   }
 
-  /** Train the shared codebook: deterministic seeds (first CodebookK
-    * subvectors by (vec_id, s)), PqIters Lloyd rounds with grid-exact
-    * means, over the same deterministic `vec_id % stride == 0` training
-    * sample as the IVF index (stride = 1 at every oracle-checked sf). */
-  def trainCodebook(emb: DataFrame): Seq[(Int, Array[Double])] = {
+  /** The training frame both codebook trainers read: the (vec_id, s,
+    * sub) subvectors of the same deterministic `vec_id % stride == 0`
+    * training sample as the IVF index (stride = 1 at every oracle-checked
+    * sf). Each Lloyd round re-reads it, so a caller training more than
+    * once holds it: SparkEntry declares it once per embedding basis. */
+  def trainingSubvectors(emb: DataFrame): DataFrame = {
     val base = emb.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = base.count()
-      val stride = math.max(1L, (n + Ivf.TrainSampleCap - 1) / Ivf.TrainSampleCap)
-      val train =
-        if (stride > 1) base.filter(col("vec_id") % stride === 0) else base
-      val sv = subvectors(train)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        var cb: Seq[(Int, Array[Double])] =
-          sv.orderBy(col("vec_id"), col("s")).limit(CodebookK)
-            .collect().zipWithIndex.map { case (r, i) =>
-              (i, r.getAs[scala.collection.Seq[Double]]("sub").toArray)
-            }.toSeq
-        if (cb.isEmpty) return cb
-        (1 to PqIters).foreach { _ =>
-          val assigned = sv.withColumn("code", nearestCode(cb, col("sub")))
-          val means = assigned
-            .select(col("code"),
-              posexplode(transform(col("sub"), x => floor(x * lit(Grid20)))))
-            .groupBy(col("code"), col("pos"))
-            .agg((sum(col("col")).cast("double")
-              / (lit(Grid20) * count(lit(1)).cast("double"))).as("m"))
-            .groupBy(col("code"))
-            .agg(map_from_entries(collect_list(struct(col("pos"), col("m"))))
-              .as("byPos"))
-            .collect()
-            .map { r =>
-              val m = r.getAs[Map[Int, Double]]("byPos")
-              r.getInt(0) -> Array.tabulate(m.size)(m)
-            }.toMap
-          cb = cb.map { case (code, old) => (code, means.getOrElse(code, old)) }
-        }
-        cb
-      } finally sv.unpersist()
-    } finally base.unpersist()
+      col("embedding").cast("array<double>").as("v"))
+    val stride = math.max(1L,
+      (emb.count() + Ivf.TrainSampleCap - 1) / Ivf.TrainSampleCap)
+    subvectors(if (stride > 1) base.filter(col("vec_id") % stride === 0) else base)
+  }
+
+  /** Train the shared codebook on `emb`'s training sample. */
+  def trainCodebook(emb: DataFrame): Seq[(Int, Array[Double])] =
+    fitCodebook(trainingSubvectors(emb))
+
+  /** The shared codebook over a [[trainingSubvectors]] frame:
+    * deterministic seeds (first CodebookK subvectors by (vec_id, s)),
+    * PqIters Lloyd rounds with grid-exact means. */
+  def fitCodebook(sv: DataFrame): Seq[(Int, Array[Double])] = {
+    var cb: Seq[(Int, Array[Double])] =
+      sv.orderBy(col("vec_id"), col("s")).limit(CodebookK)
+        .collect().zipWithIndex.map { case (r, i) =>
+          (i, r.getAs[scala.collection.Seq[Double]]("sub").toArray)
+        }.toSeq
+    if (cb.isEmpty) return cb
+    (1 to PqIters).foreach { _ =>
+      val assigned = sv.withColumn("code", nearestCode(cb, col("sub")))
+      val means = assigned
+        .select(col("code"),
+          posexplode(transform(col("sub"), x => floor(x * lit(Grid20)))))
+        .groupBy(col("code"), col("pos"))
+        .agg((sum(col("col")).cast("double")
+          / (lit(Grid20) * count(lit(1)).cast("double"))).as("m"))
+        .groupBy(col("code"))
+        .agg(map_from_entries(collect_list(struct(col("pos"), col("m"))))
+          .as("byPos"))
+        .collect()
+        .map { r =>
+          val m = r.getAs[Map[Int, Double]]("byPos")
+          r.getInt(0) -> Array.tabulate(m.size)(m)
+        }.toMap
+      cb = cb.map { case (code, old) => (code, means.getOrElse(code, old)) }
+    }
+    cb
   }
 
   /** The PQ code table: (vec_id, s, code) — 8 codes per vector, the
@@ -274,66 +279,57 @@ object Pq {
     * pooled fit does in 5). The join shape is ordinary codegen'd
     * hash-join + hash-agg at any K. Seeds: per subspace, its first
     * CodebookK subvectors by vec_id. */
-  def trainCodebooks(emb: DataFrame): Seq[Seq[(Int, Array[Double])]] = {
-    val spark = emb.sparkSession
+  def trainCodebooks(emb: DataFrame): Seq[Seq[(Int, Array[Double])]] =
+    fitCodebooks(trainingSubvectors(emb))
+
+  /** The per-subspace codebooks over a [[trainingSubvectors]] frame. */
+  def fitCodebooks(sv: DataFrame): Seq[Seq[(Int, Array[Double])]] = {
+    val spark = sv.sparkSession
     import spark.implicits._
-    val base = emb.select(col("vec_id"),
-        col("embedding").cast("array<double>").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = base.count()
-      val stride = math.max(1L, (n + Ivf.TrainSampleCap - 1) / Ivf.TrainSampleCap)
-      val train =
-        if (stride > 1) base.filter(col("vec_id") % stride === 0) else base
-      val sv = subvectors(train)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val seedRows = sv
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("s")).orderBy(col("vec_id"))))
-          .filter(col("rn") <= CodebookK)
-          .select(col("s"), (col("rn") - 1).as("code"), col("sub"))
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1),
-            r.getAs[scala.collection.Seq[Double]]("sub").toArray))
-        if (seedRows.isEmpty) return Seq.empty
-        var cbs: Seq[Seq[(Int, Array[Double])]] = (0 until NumSub).map(s =>
-          seedRows.filter(_._1 == s).sortBy(_._2)
-            .map { case (_, code, cv) => (code, cv) }.toSeq)
-        (1 to PqIters).foreach { _ =>
-          val cbDf = (for {
-            s <- cbs.indices; (code, cv) <- cbs(s)
-          } yield (s, code, cv.toSeq, cv.map(x => x * x).sum))
-            .toDF("s", "code", "cv", "cn2")
-          val assigned = sv.join(broadcast(cbDf), Seq("s"))
-            .withColumn("score",
-              lit(2.0) * Similarity.dot(col("sub"), col("cv")) - col("cn2"))
-            .groupBy(col("vec_id"), col("s"), col("sub"))
-            // max of struct = lexicographic (score, code): the same
-            // (score DESC, code DESC) tie-break as the pooled argmax
-            .agg(max(struct(col("score"), col("code"))).getField("code")
-              .as("code"))
-          val means = assigned
-            .select(col("s"), col("code"),
-              posexplode(transform(col("sub"), x => floor(x * lit(Grid20)))))
-            .groupBy(col("s"), col("code"), col("pos"))
-            .agg((sum(col("col")).cast("double")
-              / (lit(Grid20) * count(lit(1)).cast("double"))).as("m"))
-            .groupBy(col("s"), col("code"))
-            .agg(map_from_entries(collect_list(struct(col("pos"), col("m"))))
-              .as("byPos"))
-            .collect()
-            .map { r =>
-              val m = r.getAs[Map[Int, Double]]("byPos")
-              (r.getInt(0), r.getInt(1)) -> Array.tabulate(m.size)(m)
-            }.toMap
-          cbs = cbs.zipWithIndex.map { case (cb, s) =>
-            cb.map { case (code, old) => (code, means.getOrElse((s, code), old)) }
-          }
-        }
-        cbs
-      } finally sv.unpersist()
-    } finally base.unpersist()
+    val seedRows = sv
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("s")).orderBy(col("vec_id"))))
+      .filter(col("rn") <= CodebookK)
+      .select(col("s"), (col("rn") - 1).as("code"), col("sub"))
+      .collect()
+      .map(r => (r.getInt(0), r.getInt(1),
+        r.getAs[scala.collection.Seq[Double]]("sub").toArray))
+    if (seedRows.isEmpty) return Seq.empty
+    var cbs: Seq[Seq[(Int, Array[Double])]] = (0 until NumSub).map(s =>
+      seedRows.filter(_._1 == s).sortBy(_._2)
+        .map { case (_, code, cv) => (code, cv) }.toSeq)
+    (1 to PqIters).foreach { _ =>
+      val cbDf = (for {
+        s <- cbs.indices; (code, cv) <- cbs(s)
+      } yield (s, code, cv.toSeq, cv.map(x => x * x).sum))
+        .toDF("s", "code", "cv", "cn2")
+      val assigned = sv.join(broadcast(cbDf), Seq("s"))
+        .withColumn("score",
+          lit(2.0) * Similarity.dot(col("sub"), col("cv")) - col("cn2"))
+        .groupBy(col("vec_id"), col("s"), col("sub"))
+        // max of struct = lexicographic (score, code): the same
+        // (score DESC, code DESC) tie-break as the pooled argmax
+        .agg(max(struct(col("score"), col("code"))).getField("code")
+          .as("code"))
+      val means = assigned
+        .select(col("s"), col("code"),
+          posexplode(transform(col("sub"), x => floor(x * lit(Grid20)))))
+        .groupBy(col("s"), col("code"), col("pos"))
+        .agg((sum(col("col")).cast("double")
+          / (lit(Grid20) * count(lit(1)).cast("double"))).as("m"))
+        .groupBy(col("s"), col("code"))
+        .agg(map_from_entries(collect_list(struct(col("pos"), col("m"))))
+          .as("byPos"))
+        .collect()
+        .map { r =>
+          val m = r.getAs[Map[Int, Double]]("byPos")
+          (r.getInt(0), r.getInt(1)) -> Array.tabulate(m.size)(m)
+        }.toMap
+      cbs = cbs.zipWithIndex.map { case (cb, s) =>
+        cb.map { case (code, old) => (code, means.getOrElse((s, code), old)) }
+      }
+    }
+    cbs
   }
 
   /** knnPqWith for per-subspace codebooks: identical ADC machinery —

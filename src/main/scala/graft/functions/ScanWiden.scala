@@ -30,9 +30,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * three scale factors after this change).
   *
   * The native width is probed once per (session, path) — one physical
-  * planning of the bare scan, no job — and memoized. Set
-  * SPARK_GRAFT_SCAN_WIDEN=0 to disable (A/B probes; also restores the
-  * exact pre-r14 plans).
+  * planning of the bare scan, no job — and memoized. The widened-vs-
+  * native A/B measurements are in OPTIMIZATION_r14.md §6 and
+  * OPTIMIZATION_r15.md §1 (a 3.1x win at x128).
   */
 object ScanWiden {
   // keyed by the session's UUID, not the session object (r14 ADVICE:
@@ -57,7 +57,6 @@ object ScanWiden {
   val MinBytes: Long = 256L << 10
 
   def widen(s: SparkSession, path: String, df: DataFrame): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SCAN_WIDEN").contains("0")) return df
     val cores = s.sparkContext.defaultParallelism
     val native = nativeWidth.getOrElseUpdate(
       (s"${s.sparkContext.applicationId}/${System.identityHashCode(s)}", path),

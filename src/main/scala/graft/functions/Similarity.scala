@@ -313,7 +313,9 @@ object Similarity {
     * low-id query set's (the knn convention) candidate sets EXACTLY the
     * uncapped ones.
     *
-    * Recall cost, MEASURED (tools.EmbAnchorProbe, sf0.1: 2000 random
+    * Recall cost, MEASURED (capped vs uncapped thresholded pair counts,
+    * recorded only here; NOTES.md "Round 4 state" item 2 has the design;
+    * sf0.1: 2000 random
     * vectors in 16 buckets/table — population ~2x the anchor count, a
     * deliberately overfull configuration): the thresholded cosine pair
     * set keeps 422 of 656 pairs (64%). Anchored emission preserves the
@@ -323,7 +325,7 @@ object Similarity {
     * operating point. The operating knob is `bitsPerTable`: buckets per
     * table are 2^bits, so growing bits ~log2(corpus) keeps bucket
     * population flat and the cap disengaged. Measured ladder at sf0.1
-    * (EmbAnchorProbe; capped/uncapped thresholded pairs): bits=4
+    * (capped/uncapped thresholded pairs): bits=4
     * 422/656 (64%), bits=5 441/541 (82%), bits=6 401/431 (93%) — cap
     * loss shrinks as populations drop toward `anchors`, while the
     * UNCAPPED count also falls (per-table collision recall trades off),

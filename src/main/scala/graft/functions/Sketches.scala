@@ -24,9 +24,9 @@ object Sketches {
 
   /** Per-bucket anchor count for the banded join (see
     * minHashBandCandidates). 32 was chosen from the measured band-key
-    * document-frequency distribution (tools.BandDfProbe): no bucket at
-    * sf0.001/sf0.01 exceeds df 12, so the cap is a no-op at oracle-gate
-    * scale, while sf0.1's hottest bucket (df 106) gets its pair fan-out
+    * document-frequency distribution (NOTES.md "Round 4 state" item 1):
+    * no bucket at sf0.001/sf0.01 exceeds df 12, so the cap is a no-op at
+    * oracle-gate scale, while sf0.1's hottest bucket (df 106) gets its pair fan-out
     * halved and the growth law becomes provably linear. */
   val BandAnchors = 32
 
@@ -125,13 +125,13 @@ object Sketches {
     * instead of df^2/2 and TOTAL candidates are <= anchors * MinHashBands
     * * nDocs — linear in the corpus unconditionally, a provable bound
     * rather than an empirical trend. Recall: buckets with df <= anchors+1
-    * (every bucket at oracle-gate scale, tools.BandDfProbe) emit ALL
+    * (every bucket at oracle-gate scale, NOTES.md "Round 4 state") emit ALL
     * their pairs — identical output to the uncapped join; in hotter
     * buckets every member still pairs with the bucket's minimum doc_id,
     * so bucket CONNECTIVITY (what near-dup clustering consumes) is
     * preserved exactly, and only non-anchor/non-anchor pairs that share
     * no other band are lost (measured 0 of 93 pairs at sf0.001, < 3.5%
-    * at 20x that corpus — tools.BandDfProbe; a df-DROP cap like the
+    * at 20x that corpus — NOTES.md "Round 4 state"; a df-DROP cap like the
     * jaccard path's maxDocFreq was measured and REJECTED: hot buckets
     * are substantially REAL near-dup clusters, and dropping them lost
     * 2333 of 7060 true pairs at 20x).
@@ -212,7 +212,8 @@ object Sketches {
     * exposed for single-level ~13-bit keys (20x->40x ratio 3.49). The
     * composite key has ~13 + ~10 matching bits, cutting that term
     * ~2^10 for (r+1)^2 = 25 keys/doc instead of r+1, and measures 25%
-    * faster at 40x sf0.1 (13.5 s vs 18.1 s warm, tools.SimhashProbe).
+    * faster at 40x sf0.1 (13.5 s vs 18.1 s warm, NOTES.md "Round 4,
+    * earlier sessions" item 14).
     * What remains after the composite keys is the correlated near-miss
     * stream, and the round-8 probes ATTRIBUTED it (measure, don't
     * guess): at x40 the uncentered vote left 310M matched rows for
@@ -281,7 +282,7 @@ object Sketches {
 
   /** The raw two-level band-join matched stream over a (doc_id,
     * simhash) frame (multi-key duplicates included, nothing filtered) —
-    * also the growth diagnostic for tools.SimhashProbe. */
+    * also the growth diagnostic NOTES.md "Round 8" item 3 attributes. */
   private[graft] def simHashBandMatches(sh: DataFrame, maxHamming: Int): DataFrame = {
     val bands = simHashBands(sh, maxHamming)
     bands.as("a")

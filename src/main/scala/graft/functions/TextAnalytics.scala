@@ -1172,7 +1172,7 @@ object TextAnalytics {
     // ONE bigram-count pass (r15, verdict item 7): the three margins
     // (cctx, cug, tot) and the scored join all consume cbg, and the
     // hoped-for AQE stage reuse DOES NOT FIRE — the executed x64 final
-    // plan (tools.ReuseProbe) showed four separate ShuffleQueryStages
+    // plan (OPTIMIZATION_r15.md §7) showed four separate ShuffleQueryStages
     // each re-running the corpus bigram explode + (prev,cur)
     // aggregation. The lazy localCheckpoint makes cbg one RDD shared by
     // every consumer (the perplexityBuckets/admissions precedent):
@@ -1249,7 +1249,7 @@ object TextAnalytics {
     * buckets, independent of corpus size) at any published setting. */
   val DsirBuckets: Int = 1024
 
-  /** The at-scale operating grid: tools.DsirBucketsProbe measured
+  /** The at-scale operating grid: NOTES.md "Round 10" item 5 records
     * target-language keep-rate rising monotonically to a plateau at 2^13
     * — exactly the paper's setting (collisions between unrelated n-grams
     * dilute likelihood ratios at 1024) — with 8192 vs 16384 nearly

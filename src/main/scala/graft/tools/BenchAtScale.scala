@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize a K-times-scaled copy of a testdata directory so the FULL
@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   *
   * Run (two steps so Bench stays the single timing harness):
   *   sbt "runMain graft.tools.BenchAtScale 10 /tmp/graft_sf_x10"
-  *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf_x10 SPARK_GRAFT_CPUS=32 sbt "runMain graft.Bench"
+  *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf_x10 sbt "runMain graft.Bench"
   *
   * Note: events.ts is written back as BIGINT nanos (the exact values the
   * nanosAsLong read produces) — Snapshots.eventsRaw reads either
@@ -51,14 +51,8 @@ object BenchAtScale {
     // id strides stay collision-free far past this cap (doc/event ids
     // offset by r*1e8, user ids by r*1e6 — source ids are << both).
     require(k >= 1 && k <= 128, s"k out of range: $k")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession()
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def replicate(table: String)(per: (DataFrame, Int) => DataFrame): Unit = {
       val df = spark.read.parquet(s"$src/$table.parquet")

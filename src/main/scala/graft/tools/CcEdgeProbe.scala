@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Adjudication probe (r15): size and trace the warmup dedupClusters
@@ -8,18 +7,11 @@ import org.apache.spark.sql.functions._
   * count, and the CC loop's per-round trace (SPARK_GRAFT_CC_TRACE=1
   * upstream) — so a super-linear warmup_cpu step can be attributed to
   * input growth vs loop behavior. Usage:
-  *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf_x64 SPARK_GRAFT_CPUS=32 \
-  *     sbt "runMain graft.tools.CcEdgeProbe"
+  *   SPARK_GRAFT_SF_DIR=/tmp/graft_sf_x64 sbt "runMain graft.tools.CcEdgeProbe"
   */
 object CcEdgeProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val t0 = System.nanoTime()

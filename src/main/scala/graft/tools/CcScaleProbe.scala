@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The distributed-CC watchdog (r14 verdict item 6 → r15): since the
@@ -22,12 +21,7 @@ import org.apache.spark.sql.functions._
 object CcScaleProbe {
   def main(args: Array[String]): Unit = {
     val nComp = args.headOption.map(_.toInt).getOrElse(15000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession()
     import spark.implicits._
 
     // deterministic component zoo: component c owns ids [c*100, c*100+60)
@@ -64,7 +58,7 @@ object CcScaleProbe {
     val line = s"""{"metric":"cc_distributed_probe","edges":$nEdges,""" +
       s""""components":$nComp,"wall_distributed_sec":${f"$wallD%.3f"},""" +
       s""""wall_driver_sec":${f"$wallU%.3f"},"labels_equal":$equal,""" +
-      s""""wrong_labels":$wrong,"cpus":$cpus,""" +
+      s""""wrong_labels":$wrong,"cpus":${ToolSession.cpus},""" +
       s""""gate_edges":${graft.functions.Dedup.DriverCcMaxEdges}}"""
     val out = new java.io.PrintWriter("CC_PROBE.json", "UTF-8")
     try out.println(line) finally out.close()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: dump ONE named SparkEntry query (plus its oracle SQL as a
   * single-entry oracle_sql.json) so tools/parity.py can check it in
   * isolation without a full Verify pass. Usage:
@@ -9,13 +7,7 @@ import org.apache.spark.sql.SparkSession
 object DumpQuery {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, names @ _*) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ToolSession()
     sys.env.get("SPARK_GRAFT_ANN_SAMPLE_MOD").foreach(m =>
       spark.conf.set(graft.functions.AtScale.AnnSampleModKey, m))
     new java.io.File(outDir).mkdirs()

@@ -1,7 +1,7 @@
 package graft.tools
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -10,7 +10,7 @@ import graft.operators.IncrementalDedup
 import graft.streaming._
 
 /** The tracked streaming-surface benchmark (r10 verdict item 6): every
-  * streaming twin driven MemoryStream -> noop sink at local[32], with
+  * streaming twin driven MemoryStream -> noop sink, with
   * sustained drain throughput AND the max observed state-row count —
   * the committed evidence that each twin's state contract (k-bounded,
   * TTL-evicted, sketch-fixed, zero-row gate, stateless join) holds
@@ -104,12 +104,7 @@ object StreamBench {
     val batchSize = args.lift(1).map(_.toInt).getOrElse(20000)
     val outPath = args.lift(2).getOrElse("STREAM_BENCH.json")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ToolSession()
     implicit val sq = spark.sqlContext
     import spark.implicits._
 

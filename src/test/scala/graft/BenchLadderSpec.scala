@@ -22,12 +22,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * round 6 (runtime linear in OUTPUT, probe-verified) and exempted;
   * q_simhash_pairs left in round 8 after its quadratic was found
   * hash-structural and fixed (XOR-rotate mixing + live-bit banding,
-  * candidate-stream exponent 2.01 -> 1.07, tools.SimhashProbe). On the
+  * candidate-stream exponent 2.01 -> 1.07, NOTES.md "Round 8" item 3). On the
   * round-9 committed rungs the two remaining exemptees fit the bound
   * comfortably (editdist 0.92, minhash_calibration 0.99), so they are
   * now HELD to it — if a future rung refresh trips either, that is a
-  * genuine re-adjudication signal (probe first: SimhashProbe /
-  * CosineProbe / EdCount patterns), not a spec bug.
+  * genuine re-adjudication signal (probe first: tools.Profile, then
+  * the matched-row and true-pair counts NOTES.md "Round 8" item 3 and
+  * "Round 12" item 1 took), not a spec bug.
   */
 class BenchLadderSpec extends AnyFunSuite {
 
@@ -104,7 +105,7 @@ class BenchLadderSpec extends AnyFunSuite {
     * 1.4-1.8 — the same ±10 s tail that made the r6 round abandon
     * pairwise rung ratios for the regression fit above. Output-
     * super-linear queries sit in the same band honestly
-    * (q_editdist_pairs: tools.EdCount measured x64->x128 true-pair
+    * (q_editdist_pairs: NOTES.md "Round 12" item 1, x64->x128 true-pair
     * output 24.64M -> 52.09M = 2.11x for 2x data, isolated warm
     * runtime ratio 2.28x ~= output). The bound is therefore set at
     * exponent 2.0: a genuinely quadratic step (the r11

@@ -341,7 +341,7 @@ class PqSpec extends AnyFunSuite {
     // delta, measured and predicted); this DERIVED fixture concentrates
     // all variance in the first subspace's dims, where the snake-draft
     // permutation re-deals the hot dims one per subspace. Measured
-    // (tools.OpqFixtureProbe, hot=6): sf0.001 opq 0.69 vs pq_sub 0.32,
+    // (NOTES.md "Round 9" item 5, hot=6): sf0.001 opq 0.69 vs pq_sub 0.32,
     // sf0.01 0.83 vs 0.35 — pin a conservative +0.15 margin so a
     // permutation regression (e.g. reverting to identity) fails loudly.
     val aniso = emb.select(col("vec_id"),

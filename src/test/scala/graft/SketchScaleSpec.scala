@@ -6,7 +6,8 @@ import graft.functions.Sketches
 import graft.tools.ScaleProof
 
 /** Regression guard for the sketch path's scaling behavior, in three
-  * layers (tools.BandDfProbe holds the measurements behind the design):
+  * layers (NOTES.md "Round 4 state" item 1 holds the measurements
+  * behind the design):
   *
   * 1. EXACT linearity witness: with disjoint isomorphic replicas
   *    (tools.ScaleProof) the band join must produce ZERO cross-replica
@@ -157,7 +158,7 @@ class SketchScaleSpec extends AnyFunSuite {
 
     // THRESHOLDED-pair recall under the cap (the anchor cap preserves
     // candidate-graph connectivity, NOT the thresholded graph's — a
-    // review finding, measured in tools.EmbAnchorProbe): floor the
+    // review finding, measured as Similarity.BucketAnchors records): floor the
     // retention at the default operating point, and assert the
     // bitsPerTable knob actually recovers it (more buckets -> flatter
     // population -> cap disengages: loss 234 -> 30 pairs at bits 4 -> 6).

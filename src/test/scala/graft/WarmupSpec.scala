@@ -8,13 +8,18 @@ import org.scalatest.funsuite.AnyFunSuite
   * shared derivation exactly once, return one positive timing per
   * derivation in the canonical order, and leave the memo families
   * populated — regardless of the concurrency level. */
-class WarmupSpec extends AnyFunSuite {
-  private val Names = Seq("topicsDf", "groupsDf", "srSubjects",
+object WarmupSpec {
+  /** The warmup's derivations in canonical report order. */
+  val Names = Seq("topicsDf", "groupsDf", "srSubjects",
     "topicConfigs", "scoredPairs", "dedupClusters", "scoredBucketPairs",
     "minhashCandidates", "incrementalIndex", "incAdmissions",
     "incNgramIndex", "bm25TopK", "dupRuns", "excisionSpans",
     "boilerSpans", "pcaDirections", "ivfCentroids", "dedupIvfCentroids",
     "bpeMerges", "pqCodebook", "pqSubCodebooks", "opqCodebooks")
+}
+
+class WarmupSpec extends AnyFunSuite {
+  import WarmupSpec.Names
 
   test("concurrent warmup times every derivation and fills the memos") {
     // isolated session: this suite's memo churn must not touch suites

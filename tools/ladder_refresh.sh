@@ -7,6 +7,7 @@
 # sbt invocations race each other on target/.
 set -e
 cd /root/repo
+CPUS=$(nproc)
 
 # Corpus builds are skipped only on a COMPLETION MARKER carrying a
 # CONTENT hash of the generator's source set — bare directory existence
@@ -16,8 +17,10 @@ cd /root/repo
 # changes to the generator's source dependencies (r12 ADVICE 3): the
 # hash covers the files' bytes as they are NOW, committed or dirty.
 # FixtureCorpora.scala is in the set because the generator materializes
-# its derivations as the dirty-fixture tables.
+# its derivations as the dirty-fixture tables, ToolSession.scala because
+# it builds the generator's session.
 GENREV=$(cat src/main/scala/graft/tools/BenchAtScale.scala \
+             src/main/scala/graft/tools/ToolSession.scala \
              src/main/scala/graft/functions/FixtureCorpora.scala \
          | sha256sum | cut -d' ' -f1)
 for K in 10 20 40 64 128; do
@@ -34,7 +37,7 @@ done
 
 for K in 10 20 40 64 128; do
   echo "=== parity bench x$K $(date +%T)"
-  SPARK_GRAFT_SF_DIR=/tmp/graft_sf_x$K SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=/tmp/graft_sf_x$K SPARK_GRAFT_CPUS=$CPUS \
     SPARK_GRAFT_BENCH_OUT=BENCH_x$K.json \
     sbt -batch "runMain graft.Bench" > /tmp/bench_x$K.log 2>&1
   grep -o '"value":[0-9.]*' BENCH_x$K.json | head -1
@@ -45,7 +48,7 @@ declare -A BITS=([40]=9 [64]=10 [128]=11)
 # second pass self-settles against the first, the r10 tuned protocol
 for PASS in 1 2; do
   echo "=== tuned bench x40 pass $PASS $(date +%T)"
-  SPARK_GRAFT_SF_DIR=/tmp/graft_sf_x40 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=/tmp/graft_sf_x40 SPARK_GRAFT_CPUS=$CPUS \
     SPARK_GRAFT_BENCH_OUT=BENCH_x40_tuned.json \
     SPARK_GRAFT_LSH_BITS=${BITS[40]} SPARK_GRAFT_ANN_SAMPLE_MOD=4 \
     SPARK_GRAFT_EDITDIST_SAMPLE_MOD=2 SPARK_GRAFT_CALIBRATION_SAMPLE_MOD=4 \
@@ -53,7 +56,7 @@ for PASS in 1 2; do
 done
 for K in 64 128; do
   echo "=== tuned bench x$K $(date +%T)"
-  SPARK_GRAFT_SF_DIR=/tmp/graft_sf_x$K SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=/tmp/graft_sf_x$K SPARK_GRAFT_CPUS=$CPUS \
     SPARK_GRAFT_BENCH_OUT=BENCH_x${K}_tuned.json \
     SPARK_GRAFT_LSH_BITS=${BITS[$K]} SPARK_GRAFT_ANN_SAMPLE_MOD=4 \
     SPARK_GRAFT_EDITDIST_SAMPLE_MOD=2 SPARK_GRAFT_CALIBRATION_SAMPLE_MOD=4 \
@@ -62,7 +65,7 @@ for K in 64 128; do
 done
 
 echo "=== BENCH_LOCAL refresh $(date +%T)"
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=$CPUS \
   sbt -batch "runMain graft.Bench" > /tmp/bench_local.log 2>&1
 grep -o '"value":[0-9.]*' BENCH_LOCAL.json | head -1
 echo "=== done $(date +%T)"
