@@ -2,12 +2,16 @@ package graft.app
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.CheckpointRelease
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import graft.metrics.MetricsExposition
 import graft.operators._
 import graft.report.ClusterReporting
 import graft.sources.Snapshots
+import scala.util.chaining._
 
 /** Service entry point — the engine's equivalent of
   * `kafka-overwatch -c config.yaml` (reference: kafka_overwatch/cli/
@@ -22,13 +26,20 @@ import graft.sources.Snapshots
   * AdminClient collector producing the same tables.
   *
   * A tick works from one snapshot (`runCluster`): the scan fetches the
-  * filtered watermarks and group offsets once and persists them, every
-  * gauge and the report read those frames, and the report's topics/groups
-  * tables are built once for the report and all exports. The tick
-  * releases what it persisted at the next scan and when `runCluster`
-  * returns, dependents first. Frames that were already cached when the
-  * tick got them (fixture mode: the `Snapshots` memo) are neither
-  * persisted nor released by the tick.
+  * filtered watermarks and group offsets once and derives the per-scan lag
+  * from them; the report derives its topics/groups tables once for its
+  * collect and all exports. Each of those frames is held as an eager local
+  * checkpoint, so every plan over it scans the materialized rows and
+  * carries no lineage. Once the snapshot is held, the gauge collects and
+  * the report run side by side on the loop's action pool; the `.prom`
+  * file and the HTTP update land before the tick ends. The tick releases
+  * what it checkpointed at the next scan and when `runCluster` returns,
+  * dependents first. Frames that were already cached when the tick got
+  * them (fixture mode: the `Snapshots` memo) are neither checkpointed nor
+  * released by the tick. A local checkpoint cannot be recomputed: if an
+  * executor is lost mid-tick, that tick fails and the next scan fetches
+  * again. A failing action fails its tick with its own exception once the
+  * tick's other actions have ended.
   *
   * Usage: GraftApp <config.yaml> <sfDir> <outDir> [ticks]
   */
@@ -37,10 +48,11 @@ object GraftApp {
     val Array(configPath, sfDir, outDir) = args.take(3)
     val ticks = args.lift(3).map(_.toInt).getOrElse(1)
     val config = GraftConfig.parse(Files.readString(Paths.get(configPath)))
+    val cpus = graft.tools.ToolSession.cpus
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
+      .master(s"local[$cpus]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -109,9 +121,11 @@ object GraftApp {
     System.err.println(s"[graft] streaming mode: ${out.count()} delta rows")
   }
 
-  /** The snapshot one tick works from: filtered watermarks, group offsets
-    * and the groups dimension, as the tick's scan fetched them. */
-  private final case class TickSnapshot(wm: DataFrame, go: DataFrame, gd: DataFrame) {
+  /** The snapshot one tick works from: filtered watermarks, group offsets,
+    * the groups dimension and the per-scan lag, as the tick's scan fetched
+    * and derived them. */
+  private final case class TickSnapshot(wm: DataFrame, go: DataFrame, gd: DataFrame,
+                                        lag: DataFrame) {
     val latest: DataFrame = wm.filter(col("s") === Snapshots.NumScans)
   }
 
@@ -132,6 +146,7 @@ object GraftApp {
       sleeper = _ => (), // fixture mode: don't actually wait between ticks
       onOverrun = ms => System.err.println(
         s"[graft] ${cluster.name}: scan overran interval by ${ms}ms"))
+    val actions = new Scheduler.Actions(spark, s"graft-tick-${cluster.name}")
 
     // collector-latency Summaries (reference monitoring/prometheus.py:17-28):
     // observed around the snapshot fetch/derivation of each scan
@@ -142,42 +157,44 @@ object GraftApp {
       "kafka_overwatch_groups_describe_latency",
       "Time spent fetching consumer group offsets per scan")
 
-    // frames this tick persisted, in persist order
-    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    // A frame that is already cached belongs to someone else (fixture
-    // mode: the Snapshots memo). Unpersist matches by plan, so releasing
-    // it here would uncache the memo: leave it alone.
-    def hold(df: DataFrame): DataFrame = {
-      if (df.storageLevel == StorageLevel.NONE) { df.persist(); held += df }
-      df
+    // the RDDs this tick's checkpoints persisted, in checkpoint order
+    val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    // Computes the frame and returns it held. A frame that is already
+    // cached belongs to someone else (fixture mode: the Snapshots memo):
+    // it is computed in place and left alone.
+    def hold(df: DataFrame): DataFrame =
+      if (df.storageLevel != StorageLevel.NONE) { df.count(); df }
+      else df.localCheckpoint(eager = true).tap(_.queryExecution.logical match {
+        case r: LogicalRDD => held.synchronized(held += r.rdd)
+      })
+    // dependents first (topics/groups, then lag, then watermarks/offsets)
+    def release(): Unit = held.synchronized {
+      held.reverseIterator.foreach(CheckpointRelease.release)
+      held.clear()
     }
-    // dependents first (topics/groups, then watermarks/offsets):
-    // unpersisting a parent first makes Spark re-cache its dependents
-    def release(): Unit = { held.reverseIterator.foreach(_.unpersist()); held.clear() }
-    var snapshot: TickSnapshot = null
 
-    def scan(): Unit = {
+    def scan(): TickSnapshot = {
       release() // the previous tick's frames
-      val wm = topicsLatency.time {
-        val f = hold(Scheduler.applyTopicFilters(wmSource(),
-          cluster.topicIncludeRegexes, cluster.topicExcludeRegexes))
-        f.count() // force the fetch/derivation inside the timed section
-        f
-      }
+      // the fetches are forced inside the timed sections
+      val wm = topicsLatency.time(hold(Scheduler.applyTopicFilters(wmSource(),
+        cluster.topicIncludeRegexes, cluster.topicExcludeRegexes)))
       val (go, gd) = groupsLatency.time {
-        val go = hold(goSource())
-        val gd = Snapshots.groupsDim(spark, sfDir)
-        go.count(); gd.count()
-        (go, gd)
+        (hold(goSource()), hold(Snapshots.groupsDim(spark, sfDir)))
       }
-      snapshot = TickSnapshot(wm, go, gd)
+      TickSnapshot(wm, go, gd, hold(GroupAnalytics.lagByScan(wm, go)))
+    }
+
+    // the gauge collects run side by side on the action pool
+    def expose(snapshot: TickSnapshot): Unit = {
+      val TickSnapshot(wm, _, gd, lag) = snapshot
       val labels = Seq("cluster" -> cluster.name)
       val text = MetricsExposition.exposition(
         TopicAnalytics.clusterTotals(wm, gd),
-        GroupAnalytics.groupTopicLag(wm, go),
-        SchemaRegistryOps.counts(Snapshots.srSubjects(spark, sfDir), snapshot.latest),
+        GroupAnalytics.groupTopicLag(lag),
+        Snapshots.srRegistryCounts(spark, sfDir),
         Deltas.partitionDeltas(wm),
-        lagTrend = Some(GroupAnalytics.lagTrend(wm, go))) +
+        lagTrend = Some(GroupAnalytics.lagTrend(lag)),
+        run = actions.all(_)) +
         topicsLatency.render(labels) + "\n" +
         groupsLatency.render(labels) + "\n"
       Files.writeString(Paths.get(s"$outDir/metrics_${cluster.name}.prom"), text)
@@ -185,10 +202,10 @@ object GraftApp {
     }
 
     // the report describes the snapshot this tick's scan just took
-    def report(): Unit = {
-      val TickSnapshot(wm, go, gd) = snapshot
+    def report(snapshot: TickSnapshot): Unit = {
+      val TickSnapshot(wm, go, gd, lag) = snapshot
       val topics = hold(TopicAnalytics.topicsDf(wm, go, gd))
-      val groups = hold(GroupAnalytics.groupsDf(wm, go, gd))
+      val groups = hold(GroupAnalytics.groupsDf(lag, gd))
       val gov = cluster.governance
       val rpt = ClusterReporting.clusterReport(cluster.name, topics, groups,
         Snapshots.srSubjects(spark, sfDir), snapshot.latest,
@@ -220,7 +237,17 @@ object GraftApp {
         java.time.Instant.now().toString, reportUrl)
     }
 
-    try loop.loop(() => scan(), () => report(), Some(ticks))
-    finally release()
+    def tick(reportDue: Boolean): Unit = {
+      val snapshot = scan()
+      val reportRun = Option.when(reportDue)(actions.submit(report(snapshot)))
+      val exposed = scala.util.Try(expose(snapshot))
+      // the report ends before the tick does, whether or not the gauges failed
+      val reported = reportRun.map(r => scala.util.Try(Scheduler.await(r)))
+      exposed.get
+      reported.foreach(_.get)
+    }
+
+    try loop.loop(reportDue => tick(reportDue), Some(ticks))
+    finally try release() finally actions.shutdown()
   }
 }

@@ -1,6 +1,8 @@
 package graft.app
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.CompletableFuture
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** Scan/report cadence (W4/W5) — the reference's per-cluster loop
@@ -30,8 +32,8 @@ object Scheduler {
   final case class TickResult(scanRan: Boolean, reportRan: Boolean,
                               sleptMillis: Long, overrunMillis: Long)
 
-  /** One scheduler driving one cluster: call `loop` with the scan and
-    * report actions; it runs `ticks` iterations (None = forever). */
+  /** One scheduler driving one cluster: call `loop` with the tick's
+    * action; it runs `ticks` iterations (None = forever). */
   final class ClusterLoop(
       cluster: ClusterConfig,
       clock: () => Long = () => System.currentTimeMillis(),
@@ -40,14 +42,13 @@ object Scheduler {
 
     private var nextReportAt = Long.MinValue
 
-    def tick(scan: () => Unit, report: () => Unit): TickResult = {
+    /** One tick: `run` scans, and reports when told the report is due;
+      * the tick's elapsed time is taken when it returns. */
+    def tick(run: Boolean => Unit): TickResult = {
       val start = clock()
-      scan()
-      val reportRan = if (start >= nextReportAt) {
-        report()
-        nextReportAt = start + cluster.reporting.evaluationPeriodSeconds * 1000
-        true
-      } else false
+      val reportRan = start >= nextReportAt
+      run(reportRan)
+      if (reportRan) nextReportAt = start + cluster.reporting.evaluationPeriodSeconds * 1000
       val elapsed = clock() - start
       val intervalMs = cluster.scanIntervalSeconds * 1000
       if (elapsed > intervalMs) {
@@ -59,9 +60,50 @@ object Scheduler {
       }
     }
 
-    def loop(scan: () => Unit, report: () => Unit, ticks: Option[Int]): Unit = {
+    def loop(run: Boolean => Unit, ticks: Option[Int]): Unit = {
       var i = 0
-      while (ticks.forall(i < _)) { tick(scan, report); i += 1 }
+      while (ticks.forall(i < _)) { tick(run); i += 1 }
     }
   }
+
+  /** The pool one cluster loop runs its ticks' independent actions on.
+    * It starts a thread only when every thread it has is busy, and keeps
+    * its threads until `shutdown`, so it holds as many threads as actions
+    * ran at once (a tick runs its gauge collects and its report side by
+    * side). An action runs under the Spark local properties and active
+    * session of the thread that submitted it, so its jobs carry that
+    * thread's job description and properties. `shutdown` returns once
+    * every thread has ended. */
+  final class Actions(spark: SparkSession, name: String) {
+    private val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    private val pool = new java.util.concurrent.ThreadPoolExecutor(
+      0, Int.MaxValue, Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS,
+      new java.util.concurrent.SynchronousQueue[Runnable](),
+      { (r: Runnable) =>
+        val t = new Thread(r, s"$name-${threads.size + 1}")
+        t.setDaemon(true)
+        threads.add(t)
+        t
+      })
+
+    def submit[T](body: => T): CompletableFuture[T] =
+      SQLExecution.withThreadLocalCaptured(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool)(body)
+
+    /** Runs the bodies side by side and waits for every one of them, then
+      * returns their values in order, or throws the first failed one's
+      * own exception. */
+    def all[T](bodies: Seq[() => T]): Seq[T] =
+      bodies.map(b => submit(b())).map(f => scala.util.Try(await(f))).map(_.get)
+
+    def shutdown(): Unit = {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+      threads.forEach(_.join())
+    }
+  }
+
+  /** The future's value, or the exception its action threw. */
+  def await[T](f: CompletableFuture[T]): T =
+    try f.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
 }

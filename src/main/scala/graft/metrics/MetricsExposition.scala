@@ -54,24 +54,38 @@ object MetricsExposition {
     * per-partition new-message deltas (W1, exposed as a gauge of the last
     * interval). Each frame is collected once: the three cluster-total
     * families share one collect of `clusterTotals`, the two registry
-    * families one collect of `srCounts`. */
+    * families one collect of `srCounts`. `run` runs the collects and
+    * returns their rows in order; the default runs them one after
+    * another, a caller with a pool can run them side by side. */
   def exposition(clusterTotals: DataFrame, groupTopicLag: DataFrame,
                  srCounts: DataFrame, partitionDeltas: DataFrame,
-                 lagTrend: Option[DataFrame] = None): String = {
-    val totals = clusterTotals.select(col("cluster"), col("topics_count"),
-      col("partitions_count"), col("consumer_groups_count")).collect().toSeq
-    val sr = srCounts.select(col("registry"), col("subjects_count"),
-      col("schemas_count")).collect().toSeq
+                 lagTrend: Option[DataFrame] = None,
+                 run: Seq[() => Seq[Row]] => Seq[Seq[Row]] = _.map(_()))
+      : String = {
+    val lagLabels = Seq("cluster", "grp", "topic")
+    val deltaLabels = Seq("cluster", "topic", "partition_id")
     val latestDelta = partitionDeltas
-      .groupBy(col("cluster"), col("topic"), col("partition_id"))
+      .groupBy(deltaLabels.map(col): _*)
       .agg(max_by(col("delta"), col("scan_ts")).as("delta"))
+    // each frame projected to the columns its families render, as `gauge`
+    // projects it
+    def cols(df: DataFrame, names: String*) = df.select(names.map(col): _*)
+    val frames = Seq(
+      cols(clusterTotals, "cluster", "topics_count", "partitions_count",
+        "consumer_groups_count"),
+      cols(groupTopicLag, lagLabels :+ "total_lag": _*),
+      cols(srCounts, "registry", "subjects_count", "schemas_count"),
+      cols(latestDelta, deltaLabels :+ "delta": _*)) ++
+      lagTrend.map(cols(_, lagLabels :+ "slope": _*))
+    val rows = run(frames.map(f => () => f.collect().toSeq))
+    val Seq(totals, lag, sr, deltas) = rows.take(4)
     // beyond the reference's catalog: the lag-trend slope (exact-integer
     // least squares over the scan history, GroupAnalytics.lagTrend) —
     // the alertable is-it-falling-behind signal
-    val trendGauge = lagTrend.map(t =>
-      gauge("kafka_overwatch_consumer_group_lag_slope",
+    val trendGauge = rows.drop(4).map(t =>
+      gaugeRows("kafka_overwatch_consumer_group_lag_slope",
         "Lag least-squares slope over the scan history (positive = falling behind)",
-        t, Seq("cluster", "grp", "topic"), "slope")).toSeq
+        t, lagLabels, "slope"))
     (Seq(
       gaugeRows("kafka_overwatch_cluster_topics_count", "Total topics per cluster",
         totals, Seq("cluster"), "topics_count"),
@@ -79,14 +93,14 @@ object MetricsExposition {
         totals, Seq("cluster"), "partitions_count"),
       gaugeRows("kafka_overwatch_cluster_consumer_groups_count", "Total consumer groups per cluster",
         totals, Seq("cluster"), "consumer_groups_count"),
-      gauge("kafka_overwatch_consumer_group_lag", "Total lag per group and topic",
-        groupTopicLag, Seq("cluster", "grp", "topic"), "total_lag"),
+      gaugeRows("kafka_overwatch_consumer_group_lag", "Total lag per group and topic",
+        lag, lagLabels, "total_lag"),
       gaugeRows("kafka_overwatch_subjects_count", "Schema registry subjects",
         sr, Seq("registry"), "subjects_count"),
       gaugeRows("kafka_overwatch_schemas_count", "Schema registry schemas",
         sr, Seq("registry"), "schemas_count"),
-      gauge("kafka_overwatch_topic_partition_new_messages", "New messages in the last scan interval",
-        latestDelta, Seq("cluster", "topic", "partition_id"), "delta"))
+      gaugeRows("kafka_overwatch_topic_partition_new_messages", "New messages in the last scan interval",
+        deltas, deltaLabels, "delta"))
       ++ trendGauge)
       .mkString("\n") + "\n"
   }

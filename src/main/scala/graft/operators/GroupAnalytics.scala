@@ -12,8 +12,9 @@ import graft.sources.Snapshots.NumScans
   */
 object GroupAnalytics {
 
-  /** J1: group committed offsets joined to partition watermarks at the
-    * latest scan; lag = high - committed.
+  /** J1 at every scan: group committed offsets joined to the partition
+    * watermarks of the same scan; lag = high - committed. The one lag join:
+    * every lag analytic below reads it.
     *
     * Guards (P12, overwatch_resources/groups.py:111-130): partitions with
     * zero total messages are skipped, and committed < 0 ("no committed
@@ -21,23 +22,39 @@ object GroupAnalytics {
     * (the reference `break`s out of the whole topic).
     *
     * Scale: watermarks are tiny relative to a 100 TB offsets history, and
-    * the join keys (cluster, topic, partition_id) prefix-align with the
-    * snapshot partitioning — Catalyst broadcasts the watermark side.
-    */
-  def lagRows(wm: DataFrame, go: DataFrame): DataFrame = {
-    val wLatest = wm.filter(col("s") === NumScans)
-      .select(col("cluster"), col("topic"), col("partition_id"), col("low"), col("high"))
-    go.filter(col("s") === NumScans)
-      .join(broadcast(wLatest), Seq("cluster", "topic", "partition_id"))
-      .filter(col("high") - col("low") > 0 && col("committed") >= 0)
-      .select(col("cluster"), col("grp"), col("topic"), col("partition_id"),
+    * the join keys (cluster, topic, partition_id, s) prefix-align with the
+    * snapshot partitioning — Catalyst broadcasts the watermark side. A
+    * filter on `s` reaches both sides of the join. */
+  private def partitionLag(wm: DataFrame, go: DataFrame): DataFrame =
+    go.filter(col("committed") >= 0)
+      .join(broadcast(wm.select(col("cluster"), col("topic"),
+        col("partition_id"), col("s"), col("low"), col("high"))),
+        Seq("cluster", "topic", "partition_id", "s"))
+      .filter(col("high") - col("low") > 0)
+      .select(col("cluster"), col("grp"), col("topic"), col("partition_id"), col("s"),
         (col("high") - col("committed")).as("lag"))
-  }
+
+  /** J1 at the latest scan: (cluster, grp, topic, partition_id, lag). */
+  def lagRows(wm: DataFrame, go: DataFrame): DataFrame =
+    partitionLag(wm, go).filter(col("s") === NumScans).drop("s")
+
+  /** Per-scan lag per (cluster, group, topic): (cluster, grp, topic, s,
+    * lag, partitions_with_lag). The frame the per-(group, topic) total,
+    * the lag trend and `groupsDf`'s overall lag all read, so a caller that
+    * holds it (the service tick) runs the lag join once. */
+  def lagByScan(wm: DataFrame, go: DataFrame): DataFrame =
+    partitionLag(wm, go).groupBy(col("cluster"), col("grp"), col("topic"), col("s"))
+      .agg(sum(col("lag")).as("lag"), count(lit(1)).as("partitions_with_lag"))
 
   /** A3: per-(group, topic) total lag (overwatch_resources/groups.py:104-141). */
   def groupTopicLag(wm: DataFrame, go: DataFrame): DataFrame =
-    lagRows(wm, go).groupBy(col("cluster"), col("grp"), col("topic"))
-      .agg(sum(col("lag")).as("total_lag"), count(lit(1)).as("partitions_with_lag"))
+    groupTopicLag(lagByScan(wm, go))
+
+  /** A3 over a [[lagByScan]] frame: its latest-scan slice. */
+  def groupTopicLag(lagByScan: DataFrame): DataFrame =
+    lagByScan.filter(col("s") === NumScans)
+      .select(col("cluster"), col("grp"), col("topic"), col("lag").as("total_lag"),
+        col("partitions_with_lag"))
 
   /** Lag TREND per (cluster, group, topic): per-scan total lag regressed
     * against the scan index — the monitoring question the reference's
@@ -47,21 +64,16 @@ object GroupAnalytics {
     * The least-squares slope is computed from EXACT integer sums
     * (n·Σsy − Σs·Σy) / (n·Σs² − (Σs)²): every accumulator is a BIGINT
     * (order-free on any partitioning); the single double division at
-    * the end is deterministic on every engine. Same P12 guards as
-    * lagRows, applied per scan. Two shuffles: the per-scan lag
-    * aggregation and the per-series regression aggregation (one key
-    * prefix apart); the watermark side broadcasts as in lagRows. */
-  def lagTrend(wm: DataFrame, go: DataFrame): DataFrame = {
-    val perScan = go.filter(col("committed") >= 0)
-      .join(broadcast(wm.select(col("cluster"), col("topic"),
-        col("partition_id"), col("s"), col("low"), col("high"))),
-        Seq("cluster", "topic", "partition_id", "s"))
-      .filter(col("high") - col("low") > 0)
-      .groupBy(col("cluster"), col("grp"), col("topic"), col("s"))
-      .agg(sum(col("high") - col("committed")).as("lag"))
+    * the end is deterministic on every engine. Two shuffles: the per-scan
+    * lag aggregation ([[lagByScan]]) and the per-series regression
+    * aggregation (one key prefix apart). */
+  def lagTrend(wm: DataFrame, go: DataFrame): DataFrame = lagTrend(lagByScan(wm, go))
+
+  /** The lag trend over a [[lagByScan]] frame. */
+  def lagTrend(lagByScan: DataFrame): DataFrame = {
     val num = col("n") * col("sxy") - col("sx") * col("sy")
     val den = col("n") * col("sxx") - col("sx") * col("sx")
-    perScan.groupBy(col("cluster"), col("grp"), col("topic"))
+    lagByScan.groupBy(col("cluster"), col("grp"), col("topic"))
       .agg(count(lit(1)).as("n"), sum(col("s")).as("sx"), sum(col("lag")).as("sy"),
         sum(col("s") * col("s")).as("sxx"), sum(col("s") * col("lag")).as("sxy"))
       .filter(col("n") >= 2)
@@ -85,8 +97,13 @@ object GroupAnalytics {
 
   /** The reference's `groups_df`: name, members, state, eval_elapsed_time,
     * overall_lag (A4: sum over topics, overwatch_resources/groups.py:95). */
-  def groupsDf(wm: DataFrame, go: DataFrame, gd: DataFrame): DataFrame = {
-    val overall = lagRows(wm, go).groupBy(col("cluster"), col("grp"))
+  def groupsDf(wm: DataFrame, go: DataFrame, gd: DataFrame): DataFrame =
+    groupsDf(lagByScan(wm, go), gd)
+
+  /** `groups_df` over a [[lagByScan]] frame and the groups dimension. */
+  def groupsDf(lagByScan: DataFrame, gd: DataFrame): DataFrame = {
+    val overall = lagByScan.filter(col("s") === NumScans)
+      .groupBy(col("cluster"), col("grp"))
       .agg(sum(col("lag")).as("overall_lag"))
     val elapsed = gd.groupBy(col("cluster"), col("grp"))
       .agg((max(col("scan_ts")) - min(col("scan_ts"))).as("eval_elapsed_time"))

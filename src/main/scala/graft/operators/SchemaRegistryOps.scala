@@ -38,11 +38,15 @@ object SchemaRegistryOps {
       col("registry"), col("subject"), col("version"), col("schema_id"),
       col("schema_type"), col("schema_string"))
 
-  /** A11: registry counts — distinct subjects / schemas + unused subjects. */
-  def counts(sr: DataFrame, topics: DataFrame): DataFrame = {
-    val c = sr.groupBy(col("registry")).agg(
+  /** Per registry: distinct subjects and schemas. */
+  def registryCounts(sr: DataFrame): DataFrame =
+    sr.groupBy(col("registry")).agg(
       countDistinct(col("subject")).as("subjects_count"),
       countDistinct(col("schema_id")).as("schemas_count"))
+
+  /** A11: registry counts — distinct subjects / schemas + unused subjects. */
+  def counts(sr: DataFrame, topics: DataFrame): DataFrame = {
+    val c = registryCounts(sr)
     val u = unusedSubjects(sr, topics).groupBy(col("registry"))
       .agg(countDistinct(col("subject")).as("unused_subjects_count"))
     c.join(u, Seq("registry"), "left")

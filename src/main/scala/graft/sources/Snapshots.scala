@@ -276,6 +276,16 @@ object Snapshots {
     derived.unionByName(injected)
   }
 
+  /** sr_registry_counts: (registry, subjects_count, schemas_count) — the
+    * two schema-registry gauge families of the service tick (A11 without
+    * the unused-subject anti-join, which the gauges do not export). Held
+    * as driver rows: a tick reads them without a job. */
+  val srRegistryCounts: Derivation[DataFrame] = derivations("srRegistryCounts",
+    Seq(srSubjects), Storage.SelfManaged, (spark, dir) => {
+      val counts = graft.operators.SchemaRegistryOps.registryCounts(srSubjects(spark, dir))
+      spark.createDataFrame(java.util.Arrays.asList(counts.collect(): _*), counts.schema)
+    }, Warm.PartOf("srSubjects"))
+
   /** topic_configs: (cluster, topic, key, value, is_default) — one row per
     * config entry, relational form of Topic.config
     * (reference: overwatch_resources/topics.py:147-155). */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** The local session every tool main runs on: `SPARK_GRAFT_CPUS` cores
   * (the host's core count when unset) and as many shuffle partitions,
   * UTC session time, no UI, ERROR logging. */
-private[tools] object ToolSession {
+private[graft] object ToolSession {
   val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 

@@ -74,7 +74,7 @@ class AppSpec extends AnyFunSuite {
       ms => { slept :+= ms; now += ms }, o => overruns :+= o)
     def scan(): Unit = { scans += 1; now += 2000 } // scan takes 2s
     def report(): Unit = reports += 1
-    loop.loop(() => scan(), () => report(), Some(4))
+    loop.loop(reportDue => { scan(); if (reportDue) report() }, Some(4))
     assert(scans === 4)
     // reports at t=0 and t=30s (evaluation period 25s, scans every 10s)
     assert(reports === 2)
@@ -82,7 +82,7 @@ class AppSpec extends AnyFunSuite {
     assert(overruns.isEmpty)
     // a slow scan overruns: no sleep, warning invoked
     def slowScan(): Unit = { scans += 1; now += 12000 }
-    val r = loop.tick(() => slowScan(), () => report())
+    val r = loop.tick(reportDue => { slowScan(); if (reportDue) report() })
     assert(r.overrunMillis === 2000L && r.sleptMillis === 0L)
     assert(overruns === Vector(2000L))
   }
@@ -169,13 +169,12 @@ class AppSpec extends AnyFunSuite {
     val dir = TestSpark.Sf0001
     def cached(df: org.apache.spark.sql.DataFrame): Boolean =
       df.storageLevel != StorageLevel.NONE // a cacheManager lookup by plan
-    // probes the cache from inside a tick: the report notifies its
-    // channels after its last export
-    final class Probe(frames: () => Seq[org.apache.spark.sql.DataFrame])
-        extends app.Notifications.Channel {
+    // probes from inside a tick: the report notifies its channels after
+    // its last export
+    final class Probe[A](probe: () => A) extends app.Notifications.Channel {
       val name = "probe"
-      var seen = Vector.empty[Seq[Boolean]]
-      def publish(m: app.Notifications.Message): Unit = seen :+= frames().map(cached)
+      var seen = Vector.empty[A]
+      def publish(m: app.Notifications.Message): Unit = seen :+= probe()
     }
     // a zero evaluation period: every tick reports
     val cfg = app.ClusterConfig("c1",
@@ -184,14 +183,11 @@ class AppSpec extends AnyFunSuite {
     // an isolated session with its own memo: the cache manager is shared
     // by every session of the context and matches by plan, so another
     // suite invalidating its memo can uncache the shared session's
-    val s = TestSpark.spark.newSession()
-    TestSpark.spark.conf.getAll.foreach { case (k, v) =>
-      if (s.conf.isModifiable(k)) s.conf.set(k, v)
-    }
+    val s = isolated()
     // fixture mode: the tick's watermarks and offsets are the memoized
     // Snapshots frames, which must stay cached through and after the ticks
     assert(cached(Snapshots.watermarks(s, dir)) && cached(Snapshots.groupOffsets(s, dir)))
-    val memoProbe = new Probe(() => Snapshots.cachedFrames(s, dir))
+    val memoProbe = new Probe(() => Snapshots.cachedFrames(s, dir).map(cached))
     graft.app.GraftApp.runCluster(s, cfg, dir,
       java.nio.file.Files.createTempDirectory("graft-app-memo").toString,
       ticks = 2, channels = Seq(memoProbe))
@@ -201,27 +197,68 @@ class AppSpec extends AnyFunSuite {
     assert(memo.forall(cached), "a tick released a memoized snapshot frame")
     assert(memoProbe.seen.size === 2 && memoProbe.seen.forall(_.forall(identity)))
 
-    // lake mode: the tick persists the frames it reads from the lake and
-    // derives for the report, and releases every one of them on return
+    // lake mode: each tick checkpoints the watermarks and offsets it reads
+    // from the lake, their per-scan lag and the report's topics/groups
+    // tables, and releases every one of them on return
     val lake = java.nio.file.Files.createTempDirectory("graft-lake-lifecycle").toString
     SnapshotLake.writeWatermarks(Snapshots.watermarks(s, dir), s"$lake/watermarks")
     SnapshotLake.writeGroupOffsets(Snapshots.groupOffsets(s, dir), s"$lake/group_offsets")
-    // the same plans the tick builds (ClusterConfig defaults: no topic filters)
-    def tickFrames(): Seq[org.apache.spark.sql.DataFrame] = {
-      val wm = SnapshotLake.readWatermarks(s, s"$lake/watermarks")
-      val go = SnapshotLake.readGroupOffsets(s, s"$lake/group_offsets")
-      val gd = Snapshots.groupsDim(s, dir)
-      Seq(wm, go, TopicAnalytics.topicsDf(wm, go, gd), GroupAnalytics.groupsDf(wm, go, gd))
-    }
-    assert(!tickFrames().exists(cached))
-    val lakeProbe = new Probe(() => tickFrames())
+    val tickRdds = newPersistentRdds(s, dir)
+    assert(tickRdds().isEmpty)
+    val lakeProbe = new Probe(() => tickRdds().size)
     graft.app.GraftApp.runCluster(s, cfg, dir,
       java.nio.file.Files.createTempDirectory("graft-app-lake-lifecycle").toString,
       ticks = 2, channels = Seq(lakeProbe), lakeDir = Some(lake))
-    assert(lakeProbe.seen === Vector.fill(2)(Seq(true, true, true, true)),
-      "the tick did not hold its snapshot and report frames")
-    assert(!tickFrames().exists(cached), "a tick frame outlived runCluster")
+    assert(lakeProbe.seen === Vector(5, 5),
+      "a tick did not hold exactly its 5 checkpointed frames")
+    assert(tickRdds().isEmpty, "a tick frame outlived runCluster")
     assert(memo.forall(cached))
+  }
+
+  test("a failing tick action fails runCluster with its own exception and leaves nothing held") {
+    import scala.jdk.CollectionConverters._
+    import graft.sources.SnapshotLake
+    val dir = TestSpark.Sf0001
+    val s = isolated()
+    val lake = java.nio.file.Files.createTempDirectory("graft-lake-failing").toString
+    SnapshotLake.writeWatermarks(Snapshots.watermarks(s, dir), s"$lake/watermarks")
+    SnapshotLake.writeGroupOffsets(Snapshots.groupOffsets(s, dir), s"$lake/group_offsets")
+    // the report action fails after its exports, while the gauges may
+    // still be collecting
+    val down = new IllegalStateException("notification channel down")
+    val failing = new app.Notifications.Channel {
+      val name = "failing"
+      def publish(m: app.Notifications.Message): Unit = throw down
+    }
+    val tickRdds = newPersistentRdds(s, dir)
+    val thrown = intercept[IllegalStateException](graft.app.GraftApp.runCluster(s,
+      app.ClusterConfig("c1"), dir,
+      java.nio.file.Files.createTempDirectory("graft-app-failing").toString,
+      ticks = 2, channels = Seq(failing), lakeDir = Some(lake)))
+    assert(thrown eq down)
+    assert(tickRdds().isEmpty, "a tick frame outlived the failed runCluster")
+    val poolThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith("graft-tick-"))
+    assert(poolThreads.isEmpty, s"pool threads left alive: $poolThreads")
+  }
+
+  /** A session with its own memo and the shared session's settings. */
+  private def isolated(): org.apache.spark.sql.SparkSession = {
+    val s = TestSpark.spark.newSession()
+    TestSpark.spark.conf.getAll.foreach { case (k, v) =>
+      if (s.conf.isModifiable(k)) s.conf.set(k, v)
+    }
+    s
+  }
+
+  /** Builds the snapshot declarations a lake-mode tick reads, then returns
+    * a probe of the persistent RDDs created since: only a tick's own. */
+  private def newPersistentRdds(s: org.apache.spark.sql.SparkSession,
+                                dir: String): () => Set[Int] = {
+    Seq(Snapshots.groupsDim(s, dir), Snapshots.srSubjects(s, dir),
+      Snapshots.srRegistryCounts(s, dir)).foreach(_.count())
+    val before = s.sparkContext.getPersistentRDDs.keySet
+    () => s.sparkContext.getPersistentRDDs.keySet.toSet -- before
   }
 
   test("lake mode: app IO reads the partitioned lake with pruned scans") {

@@ -6,7 +6,9 @@
 # mod 4), and refresh BENCH_LOCAL at sf0.1. Sequential on purpose: two
 # sbt invocations race each other on target/.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
+# the sf testdata tables sit next to the checkout
+DATA="$(cd .. && pwd)/testdata"
 CPUS=$(nproc)
 
 # Corpus builds are skipped only on a COMPLETION MARKER carrying a
@@ -28,7 +30,7 @@ for K in 10 20 40 64 128; do
   if [ ! -f "$MARKER" ] || [ "$(cat "$MARKER")" != "$GENREV" ]; then
     echo "=== build x$K corpus $(date +%T)"
     rm -rf /tmp/graft_sf_x$K
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
+    SPARK_GRAFT_SF_DIR=$DATA/sf0.1 \
       sbt -batch "runMain graft.tools.BenchAtScale $K /tmp/graft_sf_x$K" \
       > /tmp/build_x$K.log 2>&1
     echo "$GENREV" > "$MARKER"
@@ -65,7 +67,7 @@ for K in 64 128; do
 done
 
 echo "=== BENCH_LOCAL refresh $(date +%T)"
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=$CPUS \
+SPARK_GRAFT_SF_DIR=$DATA/sf0.1 SPARK_GRAFT_CPUS=$CPUS \
   sbt -batch "runMain graft.Bench" > /tmp/bench_local.log 2>&1
 grep -o '"value":[0-9.]*' BENCH_LOCAL.json | head -1
 echo "=== done $(date +%T)"
