@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.graft.CheckpointRelease
+import org.apache.spark.sql.graft.{CheckpointRelease, TickSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import graft.metrics.MetricsExposition
@@ -24,6 +24,28 @@ import scala.util.chaining._
   * cluster report JSON + DataFrame exports. Snapshot ingestion here reads
   * the deterministic fixture derivation; a live deployment swaps in an
   * AdminClient collector producing the same tables.
+  *
+  * A tick plans and runs every action on the caller's tick session
+  * (`TickSession`): a clone of the caller's session, kept across calls
+  * while the caller's conf stays as it was. A tick's inputs are a few KB,
+  * so the clone fixes three settings whose fixed cost per query outweighs
+  * the work on such data:
+  *  - whole-stage codegen off and `spark.sql.codegen.factoryMode`
+  *    `NO_CODEGEN` (an internal Spark conf): operators, projections,
+  *    predicates and orderings run interpreted, so a warm tick compiles
+  *    no Janino class (Spark's 100-entry class cache would have evicted
+  *    the last tick's classes by the next one);
+  *  - adaptive execution off: each query is planned once and runs its
+  *    shuffle stages in one job instead of one job each, and the SQL
+  *    status store keeps one small plan per execution instead of every
+  *    re-planned version with its runtime metrics.
+  * The caller's session is never modified. The shared derivations
+  * (`Snapshots.groupsDim`, `srSubjects`, `srRegistryCounts` and, in
+  * fixture mode, the watermarks and group offsets) are read on the
+  * caller's session and re-bound into the tick session with their plan
+  * unchanged, so the shared cache manager still serves them and no
+  * derivation is built for the tick session. Lake reads and every frame
+  * the tick derives belong to the tick session.
   *
   * A tick works from one snapshot (`runCluster`): the scan fetches the
   * filtered watermarks and group offsets once and derives the per-scan lag
@@ -134,19 +156,23 @@ object GraftApp {
                  http: Option[graft.metrics.MetricsHttpServer] = None,
                  channels: Seq[Notifications.Channel] = Seq.empty,
                  lakeDir: Option[String] = None): Unit = {
+    val tickSession = TickSession(spark)
+    // a derivation, read on the caller's session, as a tick-session frame
+    def derived(d: graft.Derivation[DataFrame]): DataFrame =
+      TickSession.rebind(d(spark, sfDir), tickSession)
     // lake mode: snapshots come from the partitioned lake (pruned reads);
     // fixture mode: from the in-memory derivation
     def wmSource() = lakeDir
-      .map(l => graft.sources.SnapshotLake.readWatermarks(spark, s"$l/watermarks"))
-      .getOrElse(Snapshots.watermarks(spark, sfDir))
+      .map(l => graft.sources.SnapshotLake.readWatermarks(tickSession, s"$l/watermarks"))
+      .getOrElse(derived(Snapshots.watermarks))
     def goSource() = lakeDir
-      .map(l => graft.sources.SnapshotLake.readGroupOffsets(spark, s"$l/group_offsets"))
-      .getOrElse(Snapshots.groupOffsets(spark, sfDir))
+      .map(l => graft.sources.SnapshotLake.readGroupOffsets(tickSession, s"$l/group_offsets"))
+      .getOrElse(derived(Snapshots.groupOffsets))
     val loop = new Scheduler.ClusterLoop(cluster,
       sleeper = _ => (), // fixture mode: don't actually wait between ticks
       onOverrun = ms => System.err.println(
         s"[graft] ${cluster.name}: scan overran interval by ${ms}ms"))
-    val actions = new Scheduler.Actions(spark, s"graft-tick-${cluster.name}")
+    val actions = new Scheduler.Actions(tickSession, s"graft-tick-${cluster.name}")
 
     // collector-latency Summaries (reference monitoring/prometheus.py:17-28):
     // observed around the snapshot fetch/derivation of each scan
@@ -179,7 +205,7 @@ object GraftApp {
       val wm = topicsLatency.time(hold(Scheduler.applyTopicFilters(wmSource(),
         cluster.topicIncludeRegexes, cluster.topicExcludeRegexes)))
       val (go, gd) = groupsLatency.time {
-        (hold(goSource()), hold(Snapshots.groupsDim(spark, sfDir)))
+        (hold(goSource()), hold(derived(Snapshots.groupsDim)))
       }
       TickSnapshot(wm, go, gd, hold(GroupAnalytics.lagByScan(wm, go)))
     }
@@ -191,7 +217,7 @@ object GraftApp {
       val text = MetricsExposition.exposition(
         TopicAnalytics.clusterTotals(wm, gd),
         GroupAnalytics.groupTopicLag(lag),
-        Snapshots.srRegistryCounts(spark, sfDir),
+        derived(Snapshots.srRegistryCounts),
         Deltas.partitionDeltas(wm),
         lagTrend = Some(GroupAnalytics.lagTrend(lag)),
         run = actions.all(_)) +
@@ -208,7 +234,7 @@ object GraftApp {
       val groups = hold(GroupAnalytics.groupsDf(lag, gd))
       val gov = cluster.governance
       val rpt = ClusterReporting.clusterReport(cluster.name, topics, groups,
-        Snapshots.srSubjects(spark, sfDir), snapshot.latest,
+        derived(Snapshots.srSubjects), snapshot.latest,
         java.time.Instant.now(),
         topicCompliant = if (gov.topicCompliantRegexes.nonEmpty)
           gov.topicCompliantRegexes else graft.operators.Governance.DefaultCompliant,

@@ -70,10 +70,11 @@ object Scheduler {
     * It starts a thread only when every thread it has is busy, and keeps
     * its threads until `shutdown`, so it holds as many threads as actions
     * ran at once (a tick runs its gauge collects and its report side by
-    * side). An action runs under the Spark local properties and active
-    * session of the thread that submitted it, so its jobs carry that
-    * thread's job description and properties. `shutdown` returns once
-    * every thread has ended. */
+    * side). An action runs under the Spark local properties of the thread
+    * that submitted it, so its jobs carry that thread's job description
+    * and properties, with `spark` as its active session (a service tick
+    * passes its tick session). `shutdown` returns once every thread has
+    * ended. */
   final class Actions(spark: SparkSession, name: String) {
     private val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
     private val pool = new java.util.concurrent.ThreadPoolExecutor(

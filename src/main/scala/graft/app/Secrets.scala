@@ -25,10 +25,6 @@ object Secrets {
         throw new IllegalArgumentException(s"no resolver for backend '$backend'"))
       scala.util.matching.Regex.quoteReplacement(r(ref))
     })
-
-  def interpolateAll(conf: Map[String, String],
-                     resolvers: Map[String, String => String]): Map[String, String] =
-    conf.map { case (k, v) => k -> interpolate(v, resolvers) }
 }
 
 /** F8: log redaction — JWT and password-ish values masked before a line

@@ -28,8 +28,8 @@ final case class GroupStats(cluster: String, name: String, members: Long,
 
 object TypedViews {
   import org.apache.spark.sql.{Dataset, SparkSession}
+  import graft.SparkEntry
   import graft.sources.Snapshots
-  import graft.operators.{GroupAnalytics, TopicAnalytics}
 
   def watermarks(spark: SparkSession, dir: String): Dataset[PartitionWatermark] = {
     import spark.implicits._
@@ -51,17 +51,15 @@ object TypedViews {
     Snapshots.srSubjects(spark, dir).as[SrSubject]
   }
 
+  /** topics_df as the shared declaration holds it. */
   def topicStats(spark: SparkSession, dir: String): Dataset[TopicStats] = {
     import spark.implicits._
-    TopicAnalytics.topicsDf(Snapshots.watermarks(spark, dir),
-      Snapshots.groupOffsets(spark, dir), Snapshots.groupsDim(spark, dir))
-      .as[TopicStats]
+    SparkEntry.topicsDf(spark, dir).as[TopicStats]
   }
 
+  /** groups_df as the shared declaration holds it. */
   def groupStats(spark: SparkSession, dir: String): Dataset[GroupStats] = {
     import spark.implicits._
-    GroupAnalytics.groupsDf(Snapshots.watermarks(spark, dir),
-      Snapshots.groupOffsets(spark, dir), Snapshots.groupsDim(spark, dir))
-      .as[GroupStats]
+    SparkEntry.groupsDf(spark, dir).as[GroupStats]
   }
 }

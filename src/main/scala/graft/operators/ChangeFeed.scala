@@ -30,5 +30,4 @@ object ChangeFeed {
   }
 
   def topicChurn(wm: DataFrame): DataFrame = churn(wm, "topic")
-  def groupChurn(go: DataFrame): DataFrame = churn(go, "grp")
 }

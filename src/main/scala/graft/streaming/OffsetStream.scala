@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming form of the watermark-delta analytics (SURVEY §2.9).
@@ -92,13 +92,5 @@ object OffsetStream extends Serializable {
     }
     withTs.groupByKey(w => (w.cluster, w.topic, w.partition_id))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  /** Typed view over the snapshot watermarks table. */
-  def scansOf(spark: SparkSession, dir: String): Dataset[WatermarkScan] = {
-    import spark.implicits._
-    graft.sources.Snapshots.watermarks(spark, dir)
-      .select("cluster", "topic", "partition_id", "low", "high", "scan_ts")
-      .as[WatermarkScan]
   }
 }

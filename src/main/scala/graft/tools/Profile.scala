@@ -1,11 +1,15 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
+import org.apache.spark.sql.{SparkSession, classic}
 import org.apache.spark.sql.execution.ReusedSubqueryExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import graft.SparkEntry
+import graft.app.{ClusterConfig, GraftApp}
+import graft.sources.{SnapshotLake, Snapshots}
 
 /** Per-stage task-metric totals, accumulated by [[ProfListener]] and
   * diffed around a measured body, so its time can be attributed to GC,
@@ -66,6 +70,18 @@ private[graft] final class ProfListener extends SparkListener {
   }
 }
 
+/** Jobs, stages and tasks of every job and stage that ended in the
+  * context it is added to. */
+private final class SchedulerCounts extends SparkListener {
+  val jobs, stages, tasks = new AtomicLong()
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.incrementAndGet()
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+    stages.incrementAndGet()
+    tasks.addAndGet(e.stageInfo.numTasks)
+  }
+  def snap(): (Long, Long, Long) = (jobs.get, stages.get, tasks.get)
+}
+
 /** The per-query profile of the declared query surface, one JSON line per
   * argument:
   *  - a query name prints its cold and warm noop-sink wall time (the
@@ -76,9 +92,16 @@ private[graft] final class ProfListener extends SparkListener {
   *    shuffle totals of the warm run;
   *  - `warmup` releases the derivations built so far, runs the warmup
   *    and prints its makespan, the pool size and each derivation's wall,
-  *    executor CPU and executor run seconds in report order.
+  *    executor CPU and executor run seconds in report order;
+  *  - `tick [n]` writes the snapshot lake of the sf dir, as `GraftApp
+  *    --lake` does, then runs n (default 8) lake-mode `runCluster` calls
+  *    of one tick each, on c1 and c2 in turn, and prints one line per
+  *    tick: its wall time, the SQL executions, physical-plan-description
+  *    characters and SQL plan metrics it added to the SQL status store,
+  *    its jobs, stages and tasks, the Janino compiles it caused and the
+  *    heap used after a GC once it ended.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=<sf dir> sbt "runMain graft.tools.Profile <query...|warmup>"
+  * Usage: SPARK_GRAFT_SF_DIR=<sf dir> sbt "runMain graft.tools.Profile <query...|warmup|tick [n]>"
   */
 object Profile extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
@@ -93,11 +116,18 @@ object Profile extends AdaptiveSparkPlanHelper {
   def run(s: SparkSession, dir: String, args: Seq[String])(emit: String => Unit): Unit = {
     val listener = new ProfListener
     s.sparkContext.addSparkListener(listener)
-    try args.foreach {
-      case "warmup" => emit(warmupLine(s, dir))
-      case name => emit(queryLine(s, dir, name, listener))
-    } finally s.sparkContext.removeSparkListener(listener)
+    def go(rest: List[String]): Unit = rest match {
+      case Nil =>
+      case "tick" :: n :: more if n.nonEmpty && n.forall(_.isDigit) =>
+        tickLines(s, dir, n.toInt)(emit); go(more)
+      case "tick" :: more => tickLines(s, dir, DefaultTicks)(emit); go(more)
+      case "warmup" :: more => emit(warmupLine(s, dir)); go(more)
+      case name :: more => emit(queryLine(s, dir, name, listener)); go(more)
+    }
+    try go(args.toList) finally s.sparkContext.removeSparkListener(listener)
   }
+
+  private val DefaultTicks = 8
 
   /** The body's value and its wall time in seconds. */
   private def timed[A](body: => A): (A, Double) = {
@@ -127,6 +157,72 @@ object Profile extends AdaptiveSparkPlanHelper {
     val exchanges = collectWithSubqueries(plan) { case e: Exchange => e }.size
     f"""{"name":"$name","cold_s":$cold%.3f,"warm_s":$warm%.3f,""" +
       s""""reused_nodes":$reused,"exchanges":$exchanges,${delta.json}}"""
+  }
+
+  private def tickLines(s: SparkSession, dir: String, n: Int)(emit: String => Unit): Unit = {
+    import java.nio.file.{Files, Path}
+    val lake = Files.createTempDirectory("graft-profile-lake")
+    val out = Files.createTempDirectory("graft-profile-out")
+    val counts = new SchedulerCounts
+    s.sparkContext.addSparkListener(counts)
+    val store = s.asInstanceOf[classic.SparkSession].sharedState.statusStore
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // the status store and the counts once the listener bus has delivered
+    // every event of the executions since `after`: each of them has ended
+    // and two reads 50 ms apart agree, for at most 2 s
+    def settled(after: Long) = {
+      def read() = (store.executionsList().filter(_.executionId > after), counts.snap())
+      var last = read()
+      var waited = 0
+      var done = false
+      while (!done && waited < 2000) {
+        Thread.sleep(50); waited += 50
+        val now = read()
+        done = now._2 == last._2 && now._1.map(_.executionId) == last._1.map(_.executionId) &&
+          now._1.forall(_.completionTime.isDefined)
+        last = now
+      }
+      last
+    }
+    try {
+      SnapshotLake.writeWatermarks(Snapshots.watermarks(s, dir), s"$lake/watermarks")
+      SnapshotLake.writeGroupOffsets(Snapshots.groupOffsets(s, dir), s"$lake/group_offsets")
+      (1 to n).foreach { i =>
+        val cluster = Snapshots.Clusters((i - 1) % Snapshots.Clusters.size)
+        val lastId = (-1L +: store.executionsList().map(_.executionId)).max
+        val (_, before) = settled(lastId)
+        val compiled = compiles
+        val (_, wall) = timed(GraftApp.runCluster(s, ClusterConfig(cluster), dir,
+          out.toString, ticks = 1, lakeDir = Some(lake.toString)))
+        val (added, after) = settled(lastId)
+        val compiledNow = compiles
+        emit(f"""{"name":"tick","tick":$i,"cluster":"$cluster","wall_s":$wall%.3f,""" +
+          s""""executions":${added.size},""" +
+          s""""plan_chars":${added.map(_.physicalPlanDescription.length.toLong).sum},""" +
+          s""""sql_metrics":${added.map(_.metrics.size).sum},""" +
+          s""""jobs":${after._1 - before._1},"stages":${after._2 - before._2},""" +
+          s""""tasks":${after._3 - before._3},"codegen_compiles":${compiledNow - compiled},""" +
+          f""""heap_mb":${heapAfterGcMb()}%.1f}""")
+      }
+    } finally {
+      s.sparkContext.removeSparkListener(counts)
+      Seq(lake, out).foreach { d =>
+        val paths = Files.walk(d)
+        try paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+        finally paths.close()
+      }
+    }
+  }
+
+  /** Heap used after a GC, in MB, once two GCs 100 ms apart read within 1%. */
+  private def heapAfterGcMb(): Double = {
+    val mem = java.lang.management.ManagementFactory.getMemoryMXBean
+    def used() = { System.gc(); Thread.sleep(100); mem.getHeapMemoryUsage.getUsed / 1048576.0 }
+    var last = used()
+    var now = used()
+    var tries = 0
+    while (math.abs(now - last) > 0.01 * last && tries < 8) { last = now; now = used(); tries += 1 }
+    now
   }
 
   private def warmupLine(s: SparkSession, dir: String): String = {

@@ -5,6 +5,7 @@ import graft.app.{GraftConfig, Scheduler}
 import graft.metrics.MetricsExposition
 import graft.operators.{ChangeFeed, Deltas, GroupAnalytics, TopicAnalytics}
 import graft.sources.Snapshots
+import scala.util.chaining._
 
 class AppSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -169,16 +170,6 @@ class AppSpec extends AnyFunSuite {
     val dir = TestSpark.Sf0001
     def cached(df: org.apache.spark.sql.DataFrame): Boolean =
       df.storageLevel != StorageLevel.NONE // a cacheManager lookup by plan
-    // probes from inside a tick: the report notifies its channels after
-    // its last export
-    final class Probe[A](probe: () => A) extends app.Notifications.Channel {
-      val name = "probe"
-      var seen = Vector.empty[A]
-      def publish(m: app.Notifications.Message): Unit = seen :+= probe()
-    }
-    // a zero evaluation period: every tick reports
-    val cfg = app.ClusterConfig("c1",
-      reporting = app.ReportingConfig(evaluationPeriodSeconds = 0L))
 
     // an isolated session with its own memo: the cache manager is shared
     // by every session of the context and matches by plan, so another
@@ -205,14 +196,105 @@ class AppSpec extends AnyFunSuite {
     SnapshotLake.writeGroupOffsets(Snapshots.groupOffsets(s, dir), s"$lake/group_offsets")
     val tickRdds = newPersistentRdds(s, dir)
     assert(tickRdds().isEmpty)
-    val lakeProbe = new Probe(() => tickRdds().size)
+    val keys = SparkEntry.memoKeyCount(s)
+    val lakeProbe = new Probe(() => (tickRdds().size, org.apache.spark.sql.SparkSession.active))
     graft.app.GraftApp.runCluster(s, cfg, dir,
       java.nio.file.Files.createTempDirectory("graft-app-lake-lifecycle").toString,
       ticks = 2, channels = Seq(lakeProbe), lakeDir = Some(lake))
-    assert(lakeProbe.seen === Vector(5, 5),
+    assert(lakeProbe.seen.map(_._1) === Vector(5, 5),
       "a tick did not hold exactly its 5 checkpointed frames")
     assert(tickRdds().isEmpty, "a tick frame outlived runCluster")
     assert(memo.forall(cached))
+    // the ticks read every derivation on the caller's session: none was
+    // built for the tick session, and the caller's were built before
+    val tickSession = lakeProbe.seen.head._2
+    assert(tickSession ne s)
+    assert(SparkEntry.memoKeyCount(tickSession) === 0, "a derivation was built in the tick session")
+    assert(SparkEntry.memoKeyCount(s) === keys, "a tick rebuilt a derivation")
+  }
+
+  test("a lake-mode tick's gauges and report equal the compiled path's over the same lake") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    import graft.sources.SnapshotLake
+    import graft.report.ClusterReporting
+    val dir = TestSpark.Sf0001
+    // the caller compiles every query and plans it adaptively
+    val s = isolated()
+    Seq("spark.sql.codegen.wholeStage" -> "true", "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.adaptive.enabled" -> "true").foreach { case (k, v) => s.conf.set(k, v) }
+    val lake = writeLake(s, dir)
+    val out = java.nio.file.Files.createTempDirectory("graft-app-equal").toString
+    graft.app.GraftApp.runCluster(s, app.ClusterConfig("c1"), dir, out, ticks = 1,
+      lakeDir = Some(lake))
+
+    val wm = SnapshotLake.readWatermarks(s, s"$lake/watermarks")
+    val go = SnapshotLake.readGroupOffsets(s, s"$lake/group_offsets")
+    val gd = Snapshots.groupsDim(s, dir)
+    val lag = GroupAnalytics.lagByScan(wm, go)
+    val exposition = MetricsExposition.exposition(TopicAnalytics.clusterTotals(wm, gd),
+      GroupAnalytics.groupTopicLag(lag), Snapshots.srRegistryCounts(s, dir),
+      Deltas.partitionDeltas(wm), lagTrend = Some(GroupAnalytics.lagTrend(lag)))
+    // the gauge lines in any order; the latency summaries are timings
+    val prom = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$out/metrics_c1.prom"))
+    assert(prom.linesIterator.filterNot(_.contains("_describe_latency")).toSeq.sorted ===
+      exposition.linesIterator.toSeq.sorted)
+
+    val report = ClusterReporting.reportJson(ClusterReporting.clusterReport("c1",
+      TopicAnalytics.topicsDf(wm, go, gd), GroupAnalytics.groupsDf(lag, gd),
+      Snapshots.srSubjects(s, dir), wm.filter(org.apache.spark.sql.functions.col("s") ===
+        Snapshots.NumScans), java.time.Instant.now()))
+    // every field but the timestamp, map entries in any order
+    def fields(json: String) = new ObjectMapper().readTree(json).tap(_.get("cluster")
+      .get("metadata").asInstanceOf[ObjectNode].remove("timestamp"))
+    assert(fields(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$out/report_c1.json"))) === fields(report))
+  }
+
+  test("a tick runs on an interpreted tick session and leaves the caller's conf as it was") {
+    val dir = TestSpark.Sf0001
+    val s = isolated()
+    val lake = writeLake(s, dir)
+    newPersistentRdds(s, dir) // the derivations the ticks read, built on the caller's session
+    val before = s.conf.getAll
+    val probe = new Probe(() => (s.conf.getAll, org.apache.spark.sql.SparkSession.active))
+    graft.app.GraftApp.runCluster(s, cfg, dir,
+      java.nio.file.Files.createTempDirectory("graft-app-conf").toString,
+      ticks = 2, channels = Seq(probe), lakeDir = Some(lake))
+    assert(probe.seen.map(_._1) === Vector(before, before), "a tick changed the caller's conf")
+    assert(s.conf.getAll === before, "runCluster left the caller's conf changed")
+    val Vector(first, second) = probe.seen.map(_._2)
+    assert((first ne s) && (second eq first))
+    org.apache.spark.sql.graft.TickSession.Settings.foreach { case (k, v) =>
+      assert(first.conf.get(k) === v)
+    }
+  }
+
+  test("a warm tick compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val dir = TestSpark.Sf0001
+    val s = isolated()
+    val lake = writeLake(s, dir)
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // the count as each tick's report ends; its gauges may still run
+    val probe = new Probe(() => compiles)
+    graft.app.GraftApp.runCluster(s, cfg, dir,
+      java.nio.file.Files.createTempDirectory("graft-app-compiles").toString,
+      ticks = 3, channels = Seq(probe), lakeDir = Some(lake))
+    // from the end of the second tick's report: the rest of the second
+    // tick and all of the third
+    assert(compiles === probe.seen(1), "a warm tick compiled a class")
+  }
+
+  test("a warm lake-mode tick adds at most 2,000 SQL plan metrics to the status store") {
+    val s = isolated()
+    val lines = Seq.newBuilder[String]
+    // the second tick is the second call on the same caller session
+    tools.Profile.run(s, TestSpark.Sf0001, Seq("tick", "2"))(lines += _)
+    val warm = new com.fasterxml.jackson.databind.ObjectMapper().readTree(lines.result()(1))
+    assert(warm.get("executions").asInt > 0)
+    assert(warm.get("sql_metrics").asInt <= 2000, warm.toString)
+    assert(warm.get("codegen_compiles").asInt === 0, warm.toString)
   }
 
   test("a failing tick action fails runCluster with its own exception and leaves nothing held") {
@@ -240,6 +322,27 @@ class AppSpec extends AnyFunSuite {
     val poolThreads = Thread.getAllStackTraces.keySet.asScala
       .filter(_.getName.startsWith("graft-tick-"))
     assert(poolThreads.isEmpty, s"pool threads left alive: $poolThreads")
+  }
+
+  /** Probes from inside a tick: the report notifies its channels after
+    * its last export, on the tick's action pool. */
+  private final class Probe[A](probe: () => A) extends app.Notifications.Channel {
+    val name = "probe"
+    var seen = Vector.empty[A]
+    def publish(m: app.Notifications.Message): Unit = seen :+= probe()
+  }
+
+  /** A zero evaluation period: every tick reports. */
+  private val cfg = app.ClusterConfig("c1",
+    reporting = app.ReportingConfig(evaluationPeriodSeconds = 0L))
+
+  /** A snapshot lake of `dir`, written as `GraftApp --lake` writes it. */
+  private def writeLake(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+    val lake = java.nio.file.Files.createTempDirectory("graft-lake").toString
+    graft.sources.SnapshotLake.writeWatermarks(Snapshots.watermarks(s, dir), s"$lake/watermarks")
+    graft.sources.SnapshotLake.writeGroupOffsets(Snapshots.groupOffsets(s, dir),
+      s"$lake/group_offsets")
+    lake
   }
 
   /** A session with its own memo and the shared session's settings. */

@@ -13,16 +13,21 @@ class ProfileSpec extends AnyFunSuite {
     "run_s", "gc_s", "spill_mem_bytes", "spill_disk_bytes",
     "shuffle_read_bytes", "shuffle_write_bytes")
 
-  test("one JSON line per query and for the warmup") {
-    // isolated session: the warmup's invalidate must not touch suites
-    // sharing TestSpark's session
-    val s = {
-      val ns = TestSpark.spark.newSession()
-      TestSpark.spark.conf.getAll.foreach { case (k, v) =>
-        if (ns.conf.isModifiable(k)) ns.conf.set(k, v)
-      }
-      ns
+  private val TickFields = Seq("wall_s", "executions", "plan_chars", "sql_metrics",
+    "jobs", "stages", "tasks", "codegen_compiles", "heap_mb")
+
+  /** A session with its own derivations and the shared session's settings:
+    * invalidating it must not touch suites sharing TestSpark's session. */
+  private def isolated() = {
+    val ns = TestSpark.spark.newSession()
+    TestSpark.spark.conf.getAll.foreach { case (k, v) =>
+      if (ns.conf.isModifiable(k)) ns.conf.set(k, v)
     }
+    ns
+  }
+
+  test("one JSON line per query and for the warmup") {
+    val s = isolated()
     val dir = TestSpark.Sf0001
     val lines = Seq.newBuilder[String]
     tools.Profile.run(s, dir, Seq("q_cluster_report", "warmup"))(lines += _)
@@ -46,6 +51,25 @@ class ProfileSpec extends AnyFunSuite {
       Seq("wall_s", "cpu_s", "run_s").foreach(f =>
         assert(p.get(f).isNumber, s"${p.get("name").asText} lacks $f"))
       assert(p.get("wall_s").asDouble >= 0.0)
+    }
+    SparkEntry.invalidate(s, dir)
+  }
+
+  test("tick: one JSON line per lake-mode service tick") {
+    val s = isolated()
+    val dir = TestSpark.Sf0001
+    val lines = Seq.newBuilder[String]
+    tools.Profile.run(s, dir, Seq("tick", "2"))(lines += _)
+    val ticks = lines.result().map(new ObjectMapper().readTree)
+    assert(ticks.map(_.get("name").asText) === Seq("tick", "tick"))
+    assert(ticks.map(_.get("tick").asInt) === Seq(1, 2))
+    assert(ticks.map(_.get("cluster").asText) === Seq("c1", "c2"))
+    ticks.foreach { t =>
+      TickFields.foreach(f => assert(t.hasNonNull(f) && t.get(f).isNumber, s"tick line lacks $f"))
+      // a tick runs its fetches, gauge collects, report and exports
+      assert(t.get("executions").asInt > 0 && t.get("plan_chars").asLong > 0)
+      assert(t.get("jobs").asInt > 0 && t.get("tasks").asInt >= t.get("stages").asInt)
+      assert(t.get("heap_mb").asDouble > 0.0)
     }
     SparkEntry.invalidate(s, dir)
   }
