@@ -1118,18 +1118,7 @@ object SparkEntry {
   private def latestWm(s: SparkSession, dir: String): DataFrame =
     Snapshots.watermarks(s, dir).filter(col("s") === Snapshots.NumScans)
 
-  /** Materialize every memoized shared derivation (snapshot tables,
-    * topics/groups analytic tables, the jaccard pair set + clusters).
-    * Bench calls this ONCE before its timed loop and reports the cost as
-    * an explicit warmup line, so per-query numbers measure the query —
-    * not whichever alphabetically-first query happened to touch a shared
-    * cache cold. Production equivalent: the collector materializes the
-    * snapshot lake before analysts query it. */
-  def warmup(s: SparkSession, dir: String): Seq[(String, Double)] =
-    warmupAttributed(s, dir)._1
-
-  /** warmup + per-derivation executor CPU attribution: (wall, cpu) of
-    * [[warmupProfile]]. */
+  /** The (wall, cpu) maps of [[warmupProfile]]. */
   def warmupAttributed(s: SparkSession, dir: String)
       : (Seq[(String, Double)], Seq[(String, Double)]) = {
     val p = warmupProfile(s, dir)
@@ -1148,7 +1137,16 @@ object SparkEntry {
   private[graft] def warmupThreads(s: SparkSession): Int =
     math.max(1, math.min(8, s.sparkContext.defaultParallelism / 4))
 
-  /** warmup + per-derivation EXECUTOR-TIME attribution (protocol 5):
+  /** Materializes every memoized shared derivation (snapshot tables,
+    * topics/groups analytic tables, the jaccard pair set + clusters) and
+    * attributes the cost to each. Bench calls this ONCE before its timed
+    * passes and reports the cost as an explicit warmup line, so per-query
+    * numbers measure the query — not whichever alphabetically-first
+    * query happened to touch a shared cache cold. Production equivalent:
+    * the collector materializes the snapshot lake before analysts query
+    * it.
+    *
+    * Per-derivation EXECUTOR-TIME attribution (protocol 5):
     * under the concurrent pool a derivation's wall time includes
     * whatever its pool neighbors were running (the r14 x128 artifact
     * recorded excisionSpans at 6.2x its x64 wall for 2x data — a
@@ -1165,9 +1163,10 @@ object SparkEntry {
     // per-derivation timing, returned to the caller AND echoed to
     // stderr: the warmup is the one aggregate cost in the bench line,
     // so its composition must stay observable (the x10 scale run showed
-    // 306 s of warmup — this attributes it). Bench publishes the map in
-    // the sidecar's "warmup" object (r9 verdict item 2) so warmup
-    // regressions diff the same way query regressions do.
+    // 306 s of warmup — this attributes it). Bench, which calls this
+    // function, publishes the map in the sidecar's "warmup" object (r9
+    // verdict item 2) so warmup regressions diff the same way query
+    // regressions do.
     //
     // Everything here comes from the declarations ([[Derivations.tasks]]):
     // one task per derivation, except that the incremental index's four
@@ -1190,33 +1189,11 @@ object SparkEntry {
     // is expected (measurement protocol 3).
     val timings =
       new java.util.concurrent.ConcurrentHashMap[String, Double]()
-    // per-derivation executor-time attribution: job description ->
-    // stage ids at job start, executorCpuTime (ns) and executorRunTime
-    // (ms) at stage completion. Skipped (reused) stages never complete
-    // and are charged nowhere — correct, since no executor time was
-    // spent on them.
-    val stageOwner = scala.collection.concurrent.TrieMap.empty[Int, String]
-    val cpuNs = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    val runMs = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-    val cpuListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val desc = Option(j.properties)
-          .map(_.getProperty("spark.job.description")).orNull
-        if (desc != null && desc.startsWith("warmup: ")) {
-          val name = desc.stripPrefix("warmup: ")
-          j.stageInfos.foreach(si => stageOwner.putIfAbsent(si.stageId, name))
-        }
-      }
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        stageOwner.get(sc.stageInfo.stageId).foreach { name =>
-          val m = sc.stageInfo.taskMetrics
-          cpuNs.merge(name, m.executorCpuTime, (a, b) => a + b)
-          runMs.merge(name, m.executorRunTime, (a, b) => a + b)
-        }
-    }
-    s.sparkContext.addSparkListener(cpuListener)
+    // per-derivation executor-time attribution: the context's listener
+    // charges each completed stage to its job's description, which each
+    // derivation sets to "warmup <run>: <name>" on its own pool thread
+    val listener = tools.ProfListener.on(s.sparkContext)
+    val label = tools.ProfListener.runLabel("warmup")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(warmupThreads(s))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
@@ -1229,7 +1206,7 @@ object SparkEntry {
         started + (t.name -> Future.sequence(t.after.map(started)).map { _ =>
           // job descriptions are thread-local — each concurrent
           // derivation labels its own jobs (guide §1.5/§2.6)
-          s.sparkContext.setJobDescription(s"warmup: ${t.name}")
+          s.sparkContext.setJobDescription(s"$label: ${t.name}")
           val t0 = System.nanoTime()
           t.parts.foreach(_.materialize(s, dir))
           val sec = (System.nanoTime() - t0) / 1e9
@@ -1242,25 +1219,13 @@ object SparkEntry {
       pool.shutdown()
       s.sparkContext.setJobDescription(null)
     }
-    // stage-completion events arrive async: poll until the run-time
-    // totals stop moving, bounded at 2 s (as tools.ProfListener.settled)
-    def runTotal: Long = runMs.values.stream.mapToLong(_.longValue).sum
-    var last = runTotal
-    var waited = 0
-    var stable = false
-    while (!stable && waited < 2000) {
-      Thread.sleep(50); waited += 50
-      val now = runTotal
-      stable = now == last
-      last = now
-    }
-    s.sparkContext.removeSparkListener(cpuListener)
+    listener.settle()
     // report order, independent of submission or completion order — the
     // sidecar's warmup object stays diffable across runs and rounds
     val order = tasks.map(_.name)
     WarmupProfile(order.map(n => n -> timings.get(n)),
-      order.map(n => n -> cpuNs.getOrDefault(n, 0L) / 1e9),
-      order.map(n => n -> runMs.getOrDefault(n, 0L) / 1000.0))
+      order.map(n => n -> listener.of(s"$label: $n").cpuNs / 1e9),
+      order.map(n => n -> listener.of(s"$label: $n").runMs / 1000.0))
   }
 
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame =

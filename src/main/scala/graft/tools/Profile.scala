@@ -1,8 +1,10 @@
 package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.SparkContext
+import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{SparkSession, classic}
 import org.apache.spark.sql.execution.ReusedSubqueryExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -11,62 +13,93 @@ import graft.SparkEntry
 import graft.app.{ClusterConfig, GraftApp}
 import graft.sources.{SnapshotLake, Snapshots}
 
-/** Per-stage task-metric totals, accumulated by [[ProfListener]] and
-  * diffed around a measured body, so its time can be attributed to GC,
-  * spill and shuffle instead of guessed at (the x128 rung showed >3x
-  * growth on row-local queries — "consistent with spill" needed to
-  * become a measurement). */
-private[graft] final case class ProfSnap(runMs: Long, gcMs: Long,
+/** Executor task-metric totals, accumulated by [[ProfListener]], so a
+  * measured body's time can be attributed to CPU, GC, spill and shuffle
+  * instead of guessed at (the x128 rung showed >3x growth on row-local
+  * queries — "consistent with spill" needed to become a measurement). */
+private[graft] final case class ProfSnap(runMs: Long, cpuNs: Long, gcMs: Long,
     memSpill: Long, diskSpill: Long, shufRead: Long, shufWrite: Long) {
-  def -(o: ProfSnap): ProfSnap = ProfSnap(runMs - o.runMs, gcMs - o.gcMs,
-    memSpill - o.memSpill, diskSpill - o.diskSpill,
-    shufRead - o.shufRead, shufWrite - o.shufWrite)
-  def fmt: String =
-    f"run=${runMs / 1000.0}%.1fs gc=${gcMs / 1000.0}%.1fs " +
-      f"spillMem=${memSpill / 1e9}%.2fGB spillDisk=${diskSpill / 1e9}%.2fGB " +
-      f"shufR=${shufRead / 1e9}%.2fGB shufW=${shufWrite / 1e9}%.2fGB"
+  def +(o: ProfSnap): ProfSnap = ProfSnap(runMs + o.runMs, cpuNs + o.cpuNs,
+    gcMs + o.gcMs, memSpill + o.memSpill, diskSpill + o.diskSpill,
+    shufRead + o.shufRead, shufWrite + o.shufWrite)
+  /** The per-run mean of totals summed over `n` runs. */
+  def /(n: Int): ProfSnap = ProfSnap(runMs / n, cpuNs / n, gcMs / n,
+    memSpill / n, diskSpill / n, shufRead / n, shufWrite / n)
   /** The totals as JSON members (no braces). */
   def json: String =
-    f""""run_s":${runMs / 1000.0}%.3f,"gc_s":${gcMs / 1000.0}%.3f,""" +
+    f""""run_s":${runMs / 1000.0}%.3f,"cpu_s":${cpuNs / 1e9}%.3f,""" +
+      f""""gc_s":${gcMs / 1000.0}%.3f,""" +
       s""""spill_mem_bytes":$memSpill,"spill_disk_bytes":$diskSpill,""" +
       s""""shuffle_read_bytes":$shufRead,"shuffle_write_bytes":$shufWrite"""
 }
 
-/** Executor run, GC, spill and shuffle totals over every completed stage
-  * of the context it is added to. */
+private[graft] object ProfSnap {
+  val Zero: ProfSnap = ProfSnap(0L, 0L, 0L, 0L, 0L, 0L, 0L)
+  def of(m: TaskMetrics): ProfSnap = ProfSnap(m.executorRunTime,
+    m.executorCpuTime, m.jvmGCTime, m.memoryBytesSpilled, m.diskBytesSpilled,
+    m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten)
+}
+
+/** Executor totals over every completed stage of the context it listens
+  * to, in all and per job description: a stage counts toward the
+  * description of the first job that launched it. The description is a
+  * thread-local property, so concurrent threads label their own jobs.
+  * Skipped (reused) stages never complete and count nowhere, as no
+  * executor time was spent on them. */
 private[graft] final class ProfListener extends SparkListener {
-  @volatile private var runMs = 0L
-  @volatile private var gcMs = 0L
-  @volatile private var memSpill = 0L
-  @volatile private var diskSpill = 0L
-  @volatile private var shufRead = 0L
-  @volatile private var shufWrite = 0L
+  private var total = ProfSnap.Zero
+  private val owner = scala.collection.mutable.Map.empty[Int, String]
+  private val byDescription = scala.collection.mutable.Map.empty[String, ProfSnap]
+
+  override def onJobStart(j: SparkListenerJobStart): Unit =
+    Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+      .foreach(d => synchronized(j.stageIds.foreach(owner.getOrElseUpdate(_, d))))
+
   override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
     synchronized {
-      val m = sc.stageInfo.taskMetrics
-      runMs += m.executorRunTime
-      gcMs += m.jvmGCTime
-      memSpill += m.memoryBytesSpilled
-      diskSpill += m.diskBytesSpilled
-      shufRead += m.shuffleReadMetrics.totalBytesRead
-      shufWrite += m.shuffleWriteMetrics.bytesWritten
+      val m = ProfSnap.of(sc.stageInfo.taskMetrics)
+      total += m
+      owner.get(sc.stageInfo.stageId).foreach(d =>
+        byDescription(d) = byDescription.getOrElse(d, ProfSnap.Zero) + m)
     }
-  def snap(): ProfSnap = synchronized(
-    ProfSnap(runMs, gcMs, memSpill, diskSpill, shufRead, shufWrite))
 
-  /** The totals once they stop moving: stage-completion events arrive on
-    * the asynchronous listener bus, so poll every 50 ms until two reads
-    * agree, for at most 2 s. */
-  def settled(): ProfSnap = {
-    var last = snap()
+  /** The totals of the stages launched under `description` so far. */
+  def of(description: String): ProfSnap =
+    synchronized(byDescription.getOrElse(description, ProfSnap.Zero))
+
+  /** Waits until the totals stop moving: stage-completion events arrive
+    * on the asynchronous listener bus, so poll every 50 ms until two
+    * reads agree, for at most 2 s. Call it once, after the last measured
+    * body, before reading [[of]]. */
+  def settle(): Unit = {
+    var last = synchronized(total)
     var waited = 0
-    while (waited < 2000) {
+    var stable = false
+    while (!stable && waited < 2000) {
       Thread.sleep(50); waited += 50
-      val now = snap()
-      if (now == last) return now
+      val now = synchronized(total)
+      stable = now == last
       last = now
     }
-    last
+  }
+}
+
+private[graft] object ProfListener {
+  private val attached = new java.util.WeakHashMap[SparkContext, ProfListener]()
+
+  private val runs = new AtomicLong()
+
+  /** A job-description prefix that no other measured run in this JVM
+    * uses, so a run's totals never mix with an earlier run's. */
+  def runLabel(kind: String): String = s"$kind ${runs.incrementAndGet()}"
+
+  /** The context's one listener, added on first use. */
+  def on(sc: SparkContext): ProfListener = attached.synchronized {
+    attached.computeIfAbsent(sc, { c =>
+      val l = new ProfListener
+      c.addSparkListener(l)
+      l
+    })
   }
 }
 
@@ -114,17 +147,15 @@ object Profile extends AdaptiveSparkPlanHelper {
 
   /** Profiles each argument in turn and hands its line to `emit`. */
   def run(s: SparkSession, dir: String, args: Seq[String])(emit: String => Unit): Unit = {
-    val listener = new ProfListener
-    s.sparkContext.addSparkListener(listener)
     def go(rest: List[String]): Unit = rest match {
       case Nil =>
       case "tick" :: n :: more if n.nonEmpty && n.forall(_.isDigit) =>
         tickLines(s, dir, n.toInt)(emit); go(more)
       case "tick" :: more => tickLines(s, dir, DefaultTicks)(emit); go(more)
       case "warmup" :: more => emit(warmupLine(s, dir)); go(more)
-      case name :: more => emit(queryLine(s, dir, name, listener)); go(more)
+      case name :: more => emit(queryLine(s, dir, name)); go(more)
     }
-    try go(args.toList) finally s.sparkContext.removeSparkListener(listener)
+    go(args.toList)
   }
 
   private val DefaultTicks = 8
@@ -136,15 +167,16 @@ object Profile extends AdaptiveSparkPlanHelper {
     (a, (System.nanoTime() - t0) / 1e9)
   }
 
-  private def queryLine(s: SparkSession, dir: String, name: String,
-                        listener: ProfListener): String = {
+  private def queryLine(s: SparkSession, dir: String, name: String): String = {
     val query = SparkEntry.queries(name)
     def noop(): Unit =
       query(s, dir).write.format("noop").mode("overwrite").save()
+    val listener = ProfListener.on(s.sparkContext)
+    val label = ProfListener.runLabel(s"profile $name")
     val (_, cold) = timed(noop())
-    val before = listener.settled()
-    val (_, warm) = timed(noop())
-    val delta = listener.settled() - before
+    s.sparkContext.setJobDescription(label)
+    val (_, warm) = try timed(noop()) finally s.sparkContext.setJobDescription(null)
+    listener.settle()
     // a write plans its own QueryExecution; run the query's own one so its
     // executed plan is the final adaptive plan
     val df = query(s, dir)
@@ -156,7 +188,7 @@ object Profile extends AdaptiveSparkPlanHelper {
     }.size
     val exchanges = collectWithSubqueries(plan) { case e: Exchange => e }.size
     f"""{"name":"$name","cold_s":$cold%.3f,"warm_s":$warm%.3f,""" +
-      s""""reused_nodes":$reused,"exchanges":$exchanges,${delta.json}}"""
+      s""""reused_nodes":$reused,"exchanges":$exchanges,${listener.of(label).json}}"""
   }
 
   private def tickLines(s: SparkSession, dir: String, n: Int)(emit: String => Unit): Unit = {

@@ -111,8 +111,7 @@ class BenchLadderSpec extends AnyFunSuite {
     * exponent 2.0: a genuinely quadratic step (the r11
     * q_excision_rollup case, 4.10x) is caught, ambient and
     * output-driven steps are not, and no per-query exemption list
-    * exists to rot. Bench's cross-rung extrapolation settle
-    * adjudicates fresh-rung noise before the artifact is committed. */
+    * exists to rot. */
   private def assertTopStep(present: Seq[(Int, Map[String, Double])],
                             label: String): Unit = {
     assume(present.size >= 2, s"need >= 2 rungs, have ${present.size}")
@@ -257,7 +256,7 @@ class BenchLadderSpec extends AnyFunSuite {
   }
 
   /** Warmup MEASUREMENT protocol of a rung artifact: protocol >= 3
-    * runs the warmup derivations concurrently (SparkEntry.warmup,
+    * runs the warmup derivations concurrently (SparkEntry.warmupProfile,
     * r14), so warmup_sec is the phase's makespan, not the sum of
     * sequential derivations as in protocol <= 2 artifacts. The two
     * regimes are not growth-comparable: a protocol-2 -> protocol-3
@@ -370,39 +369,46 @@ class BenchLadderSpec extends AnyFunSuite {
     // same-code runs at 165-172 s vs the graded 209 s) could adjudicate.
     // From protocol 2 every settle entry carries the first pass's and
     // the re-run's own load + GC delta, so an inflated-under-load run
-    // classifies itself in-artifact.
-    // Unit level: the rendered record always carries the fields (this
-    // holds even for a round whose committed runs happened not to
-    // settle anything).
-    val rendered = Bench.Settle(first = 10.63, settled = 10.63, nReruns = 1,
-      kept = "first_lower", trigger = "prev", pred = None,
-      firstLoad = 19.7, firstGcMs = 412L, rerunLoad = 18.9,
-      rerunGcMs = 380L).json
-    for (f <- Seq("\"first\":", "\"settled\":", "\"n_reruns\":", "\"kept\":",
-        "\"trigger\":", "\"first_load\":", "\"first_gc_ms\":", "\"load\":",
-        "\"gc_ms\":"))
-      assert(rendered.contains(f), s"Settle.json lost the $f field")
-    // Artifact level: every committed protocol-stamped sidecar's settle
-    // entries carry the fields, and the run-level contended flag is
-    // present. Pre-protocol artifacts (r13's rungs) are grandfathered —
-    // they are re-stamped at their next refresh.
+    // classifies itself in-artifact. Protocol 6 settles nothing: every
+    // query's spread (cold time, warm min and max) and each warm pass's
+    // total carry the run's own noise instead.
+    // Every committed protocol-stamped sidecar carries the fields its
+    // protocol defines, and the run-level contended flag. Pre-protocol
+    // artifacts (r13's rungs) are grandfathered — they are re-stamped at
+    // their next refresh.
     val names = AllRungNames :+ "BENCH_LOCAL.json"
     val stamped = names.flatMap(n => rungBody(n).map(n -> _))
-      .filter(_._2.contains("\"protocol\":"))
-    for ((name, body) <- stamped) {
+      .flatMap { case (n, body) =>
+        "\"protocol\":(\\d+)".r.findFirstMatchIn(body).map(m => (n, m.group(1).toInt, body))
+      }
+    for ((name, protocol, body) <- stamped) {
       assert(body.contains("\"contended\":"),
         s"$name is protocol-stamped but carries no contended flag")
       assert(body.contains("\"cpus\":"),
         s"$name is protocol-stamped but carries no core count")
-      val sStart = body.indexOf("\"settle\":{")
-      assert(sStart >= 0, s"$name carries no settle object")
-      val settleObj = braceMatched(body, sStart + "\"settle\":".length)
-      val entries = "\"q_[a-zA-Z0-9_]+\":\\{".r.findAllMatchIn(settleObj)
-        .map(m => braceMatched(settleObj, m.end - 1)).toSeq
-      for (e <- entries; f <- Seq("\"first_load\":", "\"first_gc_ms\":",
-          "\"load\":", "\"gc_ms\":"))
-        assert(e.contains(f),
-          s"$name settle entry lacks the $f ambient marker: $e")
+      def entries(key: String): Seq[(String, String)] = {
+        val start = body.indexOf("\"" + key + "\":{")
+        assert(start >= 0, s"$name carries no $key object")
+        val obj = braceMatched(body, start + key.length + 3)
+        "\"(q_[a-zA-Z0-9_]+)\":\\{".r.findAllMatchIn(obj)
+          .map(m => m.group(1) -> braceMatched(obj, m.end - 1)).toSeq
+      }
+      if (protocol <= 5) {
+        for ((_, e) <- entries("settle"); f <- Seq("\"first_load\":", "\"first_gc_ms\":",
+            "\"load\":", "\"gc_ms\":"))
+          assert(e.contains(f),
+            s"$name settle entry lacks the $f ambient marker: $e")
+      } else {
+        val spread = entries("spread")
+        assert(spread.map(_._1).sorted == rungFile(name).get.keys.toSeq.sorted,
+          s"$name: the spread object must cover exactly the timed queries")
+        for ((q, e) <- spread; f <- Seq("\"cold\":", "\"min\":", "\"max\":"))
+          assert(e.contains(f), s"$name spread entry $q lacks $f: $e")
+        val passes = "\"pass_s\":\\[([0-9.,]*)\\]".r.findFirstMatchIn(body)
+          .map(_.group(1).split(',').count(_.nonEmpty))
+        assert(passes.contains(Bench.WarmPasses),
+          s"$name must carry one pass_s total per warm pass, has $passes")
+      }
     }
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SparkEntry.warmup after the r14 concurrency change (optimization
+/** SparkEntry.warmupAttributed after the r14 concurrency change (optimization
   * guide §2.6 — warmup derivations submitted from a bounded pool with
   * explicit dependency edges): the warmup must still materialize every
   * shared derivation exactly once, return one positive timing per

@@ -6,7 +6,11 @@ Usage: python3 tools/bench_diff.py OLD.json NEW.json [--threshold 1.25]
 Accepts either the raw one-line {"metric": ...} JSON or the driver's
 wrapper ({"tail": "...[info] {json}..."}). Prints per-query deltas worse
 than the threshold ratio and the total change — the regression gate to
-run after perf work.
+run after perf work. When both sides carry a "spread" object (measurement
+protocol 6: warm min and max per query), a query is SLOWER only if its new
+min is also above its old max, so run-to-run noise inside the spread is
+not reported. A compact summary line (a driver wrapper from protocol 4 on)
+has no per-query map; only its total is compared.
 """
 import json
 import re
@@ -22,7 +26,9 @@ def load(path):
     tail = doc.get("tail", "")
     m = re.findall(r'\{"metric".*?"sf":[^}]*\}', tail)
     if m:
-        return json.loads(m[-1])
+        line = json.loads(m[-1])
+        line.setdefault("queries", {})
+        return line
     # tail may be TRUNCATED mid-JSON (the driver keeps only the last N
     # bytes): reconstruct the per-query map from whole name:value pairs
     # (the cut-off first entry is unrecoverable and dropped)
@@ -45,15 +51,21 @@ def main():
     print(f"total: {old['value']:.1f}s -> {new['value']:.1f}s "
           f"({new['value'] / old['value']:.2f}x), "
           f"{len(oq)} -> {len(nq)} queries")
-    for name in sorted(set(nq) - set(oq)):
-        print(f"  NEW     {name}: {nq[name]:.2f}s")
-    for name in sorted(set(oq) - set(nq)):
-        print(f"  REMOVED {name} (was {oq[name]:.2f}s)")
+    if oq and nq:
+        for name in sorted(set(nq) - set(oq)):
+            print(f"  NEW     {name}: {nq[name]:.2f}s")
+        for name in sorted(set(oq) - set(nq)):
+            print(f"  REMOVED {name} (was {oq[name]:.2f}s)")
+    so, sn = old.get("spread", {}), new.get("spread", {})
     regressions = []
     for name in sorted(set(oq) & set(nq)):
         ratio = nq[name] / oq[name] if oq[name] > 0 else float("inf")
-        if ratio >= thr and nq[name] - oq[name] > 0.25:
-            regressions.append((ratio, name))
+        if ratio < thr or nq[name] - oq[name] <= 0.25:
+            continue
+        # a new warm min inside the old warm spread is run-to-run noise
+        if name in so and name in sn and sn[name]["min"] <= so[name]["max"]:
+            continue
+        regressions.append((ratio, name))
     for ratio, name in sorted(regressions, reverse=True):
         print(f"  SLOWER  {name}: {oq[name]:.2f}s -> {nq[name]:.2f}s ({ratio:.2f}x)")
     if not regressions:
@@ -81,22 +93,6 @@ def main():
                   f"{nw[name]:.2f}s ({ratio:.2f}x)")
         if not wregs:
             print(f"  no warmup regression >= {thr}x")
-    # settle provenance (r10 verdict item 2): a query whose re-run did
-    # NOT beat the first pass (settled == first) reproduced its elevated
-    # time — that is a real-regression signal, not ambient noise, and
-    # must not hide inside the settled map
-    settle = new.get("settle", {})
-    if settle:
-        print(f"settle: {len(settle)} quer{'y' if len(settle) == 1 else 'ies'} re-run")
-        for name in sorted(settle):
-            s = settle[name]
-            tag = {"second_lower": "settled",
-                   "first_lower": "DID NOT SETTLE (elevated time reproduced)",
-                   "rerun_failed": "RE-RUN FAILED (first-pass time kept)"}.get(
-                       s.get("kept"), s.get("kept"))
-            print(f"  {name}: first {s['first']:.2f}s -> settled "
-                  f"{s['settled']:.2f}s after {s.get('n_reruns', 1)} re-run(s)"
-                  f" — {tag}")
 
 
 if __name__ == "__main__":

@@ -1,10 +1,11 @@
 #!/bin/bash
 # Round-close ladder refresh: rebuild the x10..x128 corpora, re-run the
-# parity rung benches (self-settling against the committed sidecars),
-# run the TUNED operating-point series (x40/x64/x128 — LSH bits by the
-# log2(corpus/125) rule, ANN sampleMod 4, editdist mod 2, calibration
-# mod 4), and refresh BENCH_LOCAL at sf0.1. Sequential on purpose: two
-# sbt invocations race each other on target/.
+# parity rung benches, run the TUNED operating-point series (x40/x64/x128
+# — LSH bits by the log2(corpus/125) rule, ANN sampleMod 4, editdist mod
+# 2, calibration mod 4), and refresh BENCH_LOCAL at sf0.1. Every rung runs
+# once: Bench takes a cold and three warm passes itself and reads no
+# earlier sidecar. Sequential on purpose: two sbt invocations race each
+# other on target/.
 set -e
 cd "$(dirname "$0")/.."
 # the sf testdata tables sit next to the checkout
@@ -46,17 +47,7 @@ for K in 10 20 40 64 128; do
 done
 
 declare -A BITS=([40]=9 [64]=10 [128]=11)
-# x40_tuned is a FRESH rung (no prior sidecar): run it twice so the
-# second pass self-settles against the first, the r10 tuned protocol
-for PASS in 1 2; do
-  echo "=== tuned bench x40 pass $PASS $(date +%T)"
-  SPARK_GRAFT_SF_DIR=/tmp/graft_sf_x40 SPARK_GRAFT_CPUS=$CPUS \
-    SPARK_GRAFT_BENCH_OUT=BENCH_x40_tuned.json \
-    SPARK_GRAFT_LSH_BITS=${BITS[40]} SPARK_GRAFT_ANN_SAMPLE_MOD=4 \
-    SPARK_GRAFT_EDITDIST_SAMPLE_MOD=2 SPARK_GRAFT_CALIBRATION_SAMPLE_MOD=4 \
-    sbt -batch "runMain graft.Bench" > /tmp/bench_x40_tuned_$PASS.log 2>&1
-done
-for K in 64 128; do
+for K in 40 64 128; do
   echo "=== tuned bench x$K $(date +%T)"
   SPARK_GRAFT_SF_DIR=/tmp/graft_sf_x$K SPARK_GRAFT_CPUS=$CPUS \
     SPARK_GRAFT_BENCH_OUT=BENCH_x${K}_tuned.json \
