@@ -89,10 +89,55 @@ object Bench {
   }
 
   /** 1-minute system load average — recorded in the sidecar so a graded
-    * artifact carries its own evidence of ambient machine load. */
+    * artifact carries its own evidence of ambient machine load. It trails
+    * the minute before the reading, so it does not decide `contended`. */
   private def loadAvg(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
+
+  /** One reading of CPU use: the host's busy and total jiffies summed over
+    * its CPUs (the aggregate `cpu` line of `/proc/stat`), its CPU count,
+    * this JVM's process CPU time and the wall clock. Where `/proc/stat`
+    * cannot be read, the host fields are 0. */
+  private[graft] final case class CpuReading(hostBusy: Long, hostTotal: Long, hostCpus: Int,
+                                             processNs: Long, wallNs: Long)
+
+  private def cpuReading(): CpuReading = {
+    val processNs = java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
+      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
+      case _ => 0L
+    }
+    val stat = try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      try src.getLines().filter(_.startsWith("cpu")).toVector finally src.close()
+    } catch { case NonFatal(_) => Vector.empty }
+    // user nice system idle iowait irq softirq steal; guest time is
+    // already inside user
+    val ticks = stat.find(_.startsWith("cpu ")).toSeq
+      .flatMap(_.trim.split("\\s+").slice(1, 9).map(_.toLong))
+    val idle = ticks.slice(3, 5).sum
+    CpuReading(ticks.sum - idle, ticks.sum, stat.count(!_.startsWith("cpu ")), processNs,
+      System.nanoTime())
+  }
+
+  /** Cores that other processes kept busy on average between two
+    * readings: the host's busy share of its CPUs minus this JVM's CPU
+    * time, per wall second. The busy share is a ratio of jiffies, so the
+    * kernel's tick rate cancels out. 0 when the host could not be read. */
+  private[graft] def foreignCores(start: CpuReading, end: CpuReading): Double = {
+    val wallS = (end.wallNs - start.wallNs) / 1e9
+    val total = end.hostTotal - start.hostTotal
+    if (wallS <= 0 || total <= 0) 0.0
+    else {
+      val hostBusyCores = (end.hostBusy - start.hostBusy).toDouble / total * end.hostCpus
+      math.max(0.0, hostBusyCores - (end.processNs - start.processNs) / 1e9 / wallS)
+    }
+  }
+
+  /** A run is contended when other processes kept more than half of its
+    * cores busy on average over the run's own window. */
+  private[graft] def contended(foreign: Double, cpus: Int): Boolean =
+    foreign > cpus.toDouble / 2
 
   /** Total bytes of the corpus parquet — sizes the shuffle-partition
     * floor below. */
@@ -176,6 +221,7 @@ object Bench {
       .map(f => f.getName.stripSuffix(".parquet") -> spark.read.parquet(f.getPath).count())
 
     val loadStart = loadAvg()
+    val cpuStart = cpuReading()
     // JVM/codegen warmup outside the timed region (no input data touched)
     spark.range(1000000L).selectExpr("sum(id * 2)").collect()
     // Shared-derivation warmup, timed and reported as its own line item:
@@ -214,6 +260,7 @@ object Bench {
     val queriesGcMs = gcMs() - gcQ0
     listener.settle()
     val loadEnd = loadAvg()
+    val foreign = foreignCores(cpuStart, cpuReading())
 
     val ok = sorted.map(_._1).filterNot(failed)
     val warm = ok.map(n => n -> samples(n).tail.sorted).toMap
@@ -228,15 +275,15 @@ object Bench {
       s"""{"cold":${fmt(samples(n).head)},"min":${fmt(warm(n).head)},"max":${fmt(warm(n).last)}}"""))
     val executor = obj(ok.map(n => n -> ("{" + (listener.of(s"$label: $n") / WarmPasses).json + "}")))
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // markers: GC time per phase, heap ceiling, and system load at both
-    // ends — the artifact carries its own ambient-noise evidence.
-    // "contended": start load above half the run's core count means
-    // every timing ran against sustained external competition.
-    val contended = loadStart > cpus.toDouble / 2
+    // markers: GC time per phase, heap ceiling, system load at both ends
+    // and the cores other processes kept busy over the run — the artifact
+    // carries its own ambient-noise evidence. "contended": those cores
+    // exceed half the run's core count, so the timings ran against
+    // sustained external competition.
     val markers = s""""warmup_gc_ms":$warmupGcMs,"queries_gc_ms":$queriesGcMs,""" +
       s""""heap_max_mb":${Runtime.getRuntime.maxMemory() / (1 << 20)},""" +
-      s""""load_avg":[${fmt(loadStart)},${fmt(loadEnd)}],""" +
-      s""""cpus":$cpus,"contended":$contended,"protocol":$Protocol"""
+      s""""load_avg":[${fmt(loadStart)},${fmt(loadEnd)}],"foreign_cores":${fmt(foreign)},""" +
+      s""""cpus":$cpus,"contended":${contended(foreign, cpus)},"protocol":$Protocol"""
     val corpusJson = s""""corpus":{"generator_rev":"$genRev","rows":""" +
       obj(corpusRows.toSeq.map { case (t, n) => t -> n.toString }) + "}"
     val head = s""""metric":"total","value":${fmt(total)},"unit":"sec","warmup_sec":${fmt(warmupSec)}"""

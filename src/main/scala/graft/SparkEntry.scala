@@ -41,7 +41,7 @@ object SparkEntry {
 
   private[graft] val groupsDf = derivations("groupsDf", snapshotTables,
     Storage.MemoryAndDisk, (s, dir) => GroupAnalytics.groupsDf(
-      Snapshots.watermarks(s, dir), Snapshots.groupOffsets(s, dir),
+      GroupAnalytics.lagByScan(Snapshots.watermarks(s, dir), Snapshots.groupOffsets(s, dir)),
       Snapshots.groupsDim(s, dir)))
 
   /** The scored candidate-pair set (both overlap measures) feeds the
@@ -306,16 +306,16 @@ object SparkEntry {
       GroupAnalytics.lagRows(Snapshots.watermarks(s, dir), Snapshots.groupOffsets(s, dir))
         .orderBy(col("grp"), col("topic"), col("partition_id"))),
     "q_lag_topic" -> ((s, dir) =>
-      GroupAnalytics.groupTopicLag(Snapshots.watermarks(s, dir), Snapshots.groupOffsets(s, dir))
-        .orderBy(col("grp"), col("topic"))),
+      GroupAnalytics.groupTopicLag(GroupAnalytics.lagByScan(Snapshots.watermarks(s, dir),
+        Snapshots.groupOffsets(s, dir))).orderBy(col("grp"), col("topic"))),
     // per-group lag distribution (one hot partition hides in a total)
     "q_lag_percentiles" -> ((s, dir) =>
       GroupAnalytics.lagPercentiles(Snapshots.watermarks(s, dir),
         Snapshots.groupOffsets(s, dir)).orderBy(col("grp"))),
     // lag regressed over the scan history (exact-integer least squares)
     "q_lag_trend" -> ((s, dir) =>
-      GroupAnalytics.lagTrend(Snapshots.watermarks(s, dir), Snapshots.groupOffsets(s, dir))
-        .orderBy(col("grp"), col("topic"))),
+      GroupAnalytics.lagTrend(GroupAnalytics.lagByScan(Snapshots.watermarks(s, dir),
+        Snapshots.groupOffsets(s, dir))).orderBy(col("grp"), col("topic"))),
     "q_waste_summary" -> ((s, dir) =>
       TopicAnalytics.wasteSummary(topicsDf(s, dir)).orderBy(col("category"))),
     "q_waste_detail" -> ((s, dir) =>

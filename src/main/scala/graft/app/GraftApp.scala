@@ -6,11 +6,10 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.graft.{CheckpointRelease, TickSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.storage.StorageLevel
 import graft.metrics.MetricsExposition
 import graft.operators._
 import graft.report.ClusterReporting
-import graft.sources.Snapshots
+import graft.sources.{SnapshotLake, Snapshots}
 import scala.util.chaining._
 
 /** Service entry point — the engine's equivalent of
@@ -19,11 +18,15 @@ import scala.util.chaining._
   * the reference's process-per-cluster + pickle/mmap plumbing; per-cluster
   * isolation is a column, parallelism is task scheduling.
   *
-  * Each scheduler tick: refresh snapshots -> run the metric queries ->
+  * Each scheduler tick: scan the snapshot lake -> run the metric queries ->
   * write the Prometheus exposition; on the evaluation period: assemble the
-  * cluster report JSON + DataFrame exports. Snapshot ingestion here reads
-  * the deterministic fixture derivation; a live deployment swaps in an
-  * AdminClient collector producing the same tables.
+  * cluster report JSON + DataFrame exports. Every tick reads its
+  * watermarks and group offsets from the partitioned snapshot lake
+  * (`SnapshotLake`, partition-pruned at file listing), the way a
+  * production collector persists each scan and then queries it. `main`
+  * writes the lake from the sf dir's deterministic fixture derivation
+  * once, before the first cluster; a live deployment swaps in an
+  * AdminClient collector appending the same tables.
   *
   * A tick plans and runs every action on the caller's tick session
   * (`TickSession`): a clone of the caller's session, kept across calls
@@ -40,30 +43,29 @@ import scala.util.chaining._
   *    status store keeps one small plan per execution instead of every
   *    re-planned version with its runtime metrics.
   * The caller's session is never modified. The shared derivations
-  * (`Snapshots.groupsDim`, `srSubjects`, `srRegistryCounts` and, in
-  * fixture mode, the watermarks and group offsets) are read on the
-  * caller's session and re-bound into the tick session with their plan
-  * unchanged, so the shared cache manager still serves them and no
+  * (`Snapshots.groupsDim`, `srSubjects` and `srRegistryCounts`) are read
+  * on the caller's session and re-bound into the tick session with their
+  * plan unchanged, so the shared cache manager still serves them and no
   * derivation is built for the tick session. Lake reads and every frame
   * the tick derives belong to the tick session.
   *
-  * A tick works from one snapshot (`runCluster`): the scan fetches the
-  * filtered watermarks and group offsets once and derives the per-scan lag
-  * from them; the report derives its topics/groups tables once for its
-  * collect and all exports. Each of those frames is held as an eager local
-  * checkpoint, so every plan over it scans the materialized rows and
-  * carries no lineage. Once the snapshot is held, the gauge collects and
-  * the report run side by side on the loop's action pool; the `.prom`
-  * file and the HTTP update land before the tick ends. The tick releases
-  * what it checkpointed at the next scan and when `runCluster` returns,
-  * dependents first. Frames that were already cached when the tick got
-  * them (fixture mode: the `Snapshots` memo) are neither checkpointed nor
-  * released by the tick. A local checkpoint cannot be recomputed: if an
-  * executor is lost mid-tick, that tick fails and the next scan fetches
+  * A tick works from one snapshot (`runCluster`): the scan reads the
+  * filtered watermarks and group offsets from the lake once and derives
+  * the per-scan lag from them; the report derives its topics/groups
+  * tables once for its collect and all exports. Each of those five frames
+  * is held as an eager local checkpoint, so every plan over it scans the
+  * materialized rows and carries no lineage. Once the snapshot is held,
+  * the gauge collects and the report run side by side on the loop's
+  * action pool; the `.prom` file and the HTTP update land before the tick
+  * ends. The tick releases what it checkpointed at the next scan and when
+  * `runCluster` returns, dependents first; it holds no frame it did not
+  * checkpoint itself. A local checkpoint cannot be recomputed: if an
+  * executor is lost mid-tick, that tick fails and the next scan reads
   * again. A failing action fails its tick with its own exception once the
   * tick's other actions have ended.
   *
-  * Usage: GraftApp <config.yaml> <sfDir> <outDir> [ticks]
+  * Usage: GraftApp <config.yaml> <sfDir> <outDir> [<ticks> [--lake <dir>] [--streaming]]
+  * (`--lake` picks the lake directory, default `<outDir>/lake`)
   */
 object GraftApp {
   def main(args: Array[String]): Unit = {
@@ -90,24 +92,16 @@ object GraftApp {
          ch.ignoreErrors)) ++
        config.smtpChannels.map(ch => ch.name -> new Notifications.SmtpChannel(
          ch.name, ch.host, ch.port, ch.mailFrom, ch.mailTo))).toMap
-    // --lake <dir>: materialize the partitioned snapshot lake once and
-    // make it the app's actual IO path — scans/reports read the lake
-    // (partition-pruned at file listing) instead of the in-memory
-    // derivation, the way a production collector persists then queries.
-    val lakeDir = args.indexOf("--lake") match {
-      case i if i >= 0 && i + 1 < args.length => Some(args(i + 1))
-      case _ => None
-    }
-    lakeDir.foreach { l =>
-      graft.sources.SnapshotLake.writeWatermarks(
-        Snapshots.watermarks(spark, sfDir), s"$l/watermarks")
-      graft.sources.SnapshotLake.writeGroupOffsets(
-        Snapshots.groupOffsets(spark, sfDir), s"$l/group_offsets")
+    // the partitioned snapshot lake every tick reads, written once
+    val lake = args.indexOf("--lake") match {
+      case i if i >= 0 && i + 1 < args.length => args(i + 1)
+      case _ => s"$outDir/lake"
     }
     try {
+      SnapshotLake.write(spark, sfDir, lake)
       config.clusters.foreach { c =>
         val channels = c.reporting.notificationChannels.flatMap(channelDefs.get)
-        runCluster(spark, c, sfDir, outDir, ticks, http, channels, lakeDir)
+        runCluster(spark, c, sfDir, outDir, ticks, http, channels, Some(lake))
       }
       // release this snapshot dir's memoized frames before moving on —
       // a long-lived service looping over dirs must not accumulate dead
@@ -144,7 +138,7 @@ object GraftApp {
   }
 
   /** The snapshot one tick works from: filtered watermarks, group offsets,
-    * the groups dimension and the per-scan lag, as the tick's scan fetched
+    * the groups dimension and the per-scan lag, as the tick's scan read
     * and derived them. */
   private final case class TickSnapshot(wm: DataFrame, go: DataFrame, gd: DataFrame,
                                         lag: DataFrame) {
@@ -156,26 +150,20 @@ object GraftApp {
                  http: Option[graft.metrics.MetricsHttpServer] = None,
                  channels: Seq[Notifications.Channel] = Seq.empty,
                  lakeDir: Option[String] = None): Unit = {
+    // no lake given: this sf dir's snapshot, written before the first tick
+    val lake = lakeDir.getOrElse(s"$outDir/lake".tap(SnapshotLake.write(spark, sfDir, _)))
     val tickSession = TickSession(spark)
     // a derivation, read on the caller's session, as a tick-session frame
     def derived(d: graft.Derivation[DataFrame]): DataFrame =
       TickSession.rebind(d(spark, sfDir), tickSession)
-    // lake mode: snapshots come from the partitioned lake (pruned reads);
-    // fixture mode: from the in-memory derivation
-    def wmSource() = lakeDir
-      .map(l => graft.sources.SnapshotLake.readWatermarks(tickSession, s"$l/watermarks"))
-      .getOrElse(derived(Snapshots.watermarks))
-    def goSource() = lakeDir
-      .map(l => graft.sources.SnapshotLake.readGroupOffsets(tickSession, s"$l/group_offsets"))
-      .getOrElse(derived(Snapshots.groupOffsets))
     val loop = new Scheduler.ClusterLoop(cluster,
-      sleeper = _ => (), // fixture mode: don't actually wait between ticks
+      sleeper = _ => (), // a run of `ticks` scans: don't wait between them
       onOverrun = ms => System.err.println(
         s"[graft] ${cluster.name}: scan overran interval by ${ms}ms"))
     val actions = new Scheduler.Actions(tickSession, s"graft-tick-${cluster.name}")
 
     // collector-latency Summaries (reference monitoring/prometheus.py:17-28):
-    // observed around the snapshot fetch/derivation of each scan
+    // observed around each scan's lake reads
     val topicsLatency = new graft.metrics.LatencySummary(
       "kafka_overwatch_topics_describe_latency",
       "Time spent fetching topic watermarks per scan")
@@ -185,12 +173,9 @@ object GraftApp {
 
     // the RDDs this tick's checkpoints persisted, in checkpoint order
     val held = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-    // Computes the frame and returns it held. A frame that is already
-    // cached belongs to someone else (fixture mode: the Snapshots memo):
-    // it is computed in place and left alone.
+    // computes the frame and returns it held
     def hold(df: DataFrame): DataFrame =
-      if (df.storageLevel != StorageLevel.NONE) { df.count(); df }
-      else df.localCheckpoint(eager = true).tap(_.queryExecution.logical match {
+      df.localCheckpoint(eager = true).tap(_.queryExecution.logical match {
         case r: LogicalRDD => held.synchronized(held += r.rdd)
       })
     // dependents first (topics/groups, then lag, then watermarks/offsets)
@@ -201,13 +186,13 @@ object GraftApp {
 
     def scan(): TickSnapshot = {
       release() // the previous tick's frames
-      // the fetches are forced inside the timed sections
-      val wm = topicsLatency.time(hold(Scheduler.applyTopicFilters(wmSource(),
+      // the lake reads are forced inside the timed sections
+      val wm = topicsLatency.time(hold(Scheduler.applyTopicFilters(
+        SnapshotLake.readWatermarks(tickSession, s"$lake/watermarks"),
         cluster.topicIncludeRegexes, cluster.topicExcludeRegexes)))
-      val (go, gd) = groupsLatency.time {
-        (hold(goSource()), hold(derived(Snapshots.groupsDim)))
-      }
-      TickSnapshot(wm, go, gd, hold(GroupAnalytics.lagByScan(wm, go)))
+      val go = groupsLatency.time(hold(
+        SnapshotLake.readGroupOffsets(tickSession, s"$lake/group_offsets")))
+      TickSnapshot(wm, go, derived(Snapshots.groupsDim), hold(GroupAnalytics.lagByScan(wm, go)))
     }
 
     // the gauge collects run side by side on the action pool
@@ -219,7 +204,7 @@ object GraftApp {
         GroupAnalytics.groupTopicLag(lag),
         derived(Snapshots.srRegistryCounts),
         Deltas.partitionDeltas(wm),
-        lagTrend = Some(GroupAnalytics.lagTrend(lag)),
+        GroupAnalytics.lagTrend(lag),
         run = actions.all(_)) +
         topicsLatency.render(labels) + "\n" +
         groupsLatency.render(labels) + "\n"

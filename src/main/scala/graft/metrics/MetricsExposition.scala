@@ -52,14 +52,15 @@ object MetricsExposition {
   /** The reference's full cluster gauge catalog in one exposition document:
     * cluster totals (A5), per-(group, topic) lag (A3), SR counts (A11),
     * per-partition new-message deltas (W1, exposed as a gauge of the last
-    * interval). Each frame is collected once: the three cluster-total
-    * families share one collect of `clusterTotals`, the two registry
-    * families one collect of `srCounts`. `run` runs the collects and
-    * returns their rows in order; the default runs them one after
-    * another, a caller with a pool can run them side by side. */
+    * interval), then the lag-trend slope. Each frame is collected once:
+    * the three cluster-total families share one collect of
+    * `clusterTotals`, the two registry families one collect of
+    * `srCounts`. `run` runs the collects and returns their rows in order;
+    * the default runs them one after another, a caller with a pool can
+    * run them side by side. */
   def exposition(clusterTotals: DataFrame, groupTopicLag: DataFrame,
                  srCounts: DataFrame, partitionDeltas: DataFrame,
-                 lagTrend: Option[DataFrame] = None,
+                 lagTrend: DataFrame,
                  run: Seq[() => Seq[Row]] => Seq[Seq[Row]] = _.map(_()))
       : String = {
     val lagLabels = Seq("cluster", "grp", "topic")
@@ -75,18 +76,10 @@ object MetricsExposition {
         "consumer_groups_count"),
       cols(groupTopicLag, lagLabels :+ "total_lag": _*),
       cols(srCounts, "registry", "subjects_count", "schemas_count"),
-      cols(latestDelta, deltaLabels :+ "delta": _*)) ++
-      lagTrend.map(cols(_, lagLabels :+ "slope": _*))
-    val rows = run(frames.map(f => () => f.collect().toSeq))
-    val Seq(totals, lag, sr, deltas) = rows.take(4)
-    // beyond the reference's catalog: the lag-trend slope (exact-integer
-    // least squares over the scan history, GroupAnalytics.lagTrend) —
-    // the alertable is-it-falling-behind signal
-    val trendGauge = rows.drop(4).map(t =>
-      gaugeRows("kafka_overwatch_consumer_group_lag_slope",
-        "Lag least-squares slope over the scan history (positive = falling behind)",
-        t, lagLabels, "slope"))
-    (Seq(
+      cols(latestDelta, deltaLabels :+ "delta": _*),
+      cols(lagTrend, lagLabels :+ "slope": _*))
+    val Seq(totals, lag, sr, deltas, trend) = run(frames.map(f => () => f.collect().toSeq))
+    Seq(
       gaugeRows("kafka_overwatch_cluster_topics_count", "Total topics per cluster",
         totals, Seq("cluster"), "topics_count"),
       gaugeRows("kafka_overwatch_cluster_partitions_count", "Total partitions per cluster",
@@ -100,8 +93,13 @@ object MetricsExposition {
       gaugeRows("kafka_overwatch_schemas_count", "Schema registry schemas",
         sr, Seq("registry"), "schemas_count"),
       gaugeRows("kafka_overwatch_topic_partition_new_messages", "New messages in the last scan interval",
-        deltas, deltaLabels, "delta"))
-      ++ trendGauge)
+        deltas, deltaLabels, "delta"),
+      // beyond the reference's catalog: the lag-trend slope (exact-integer
+      // least squares over the scan history, GroupAnalytics.lagTrend) —
+      // the alertable is-it-falling-behind signal
+      gaugeRows("kafka_overwatch_consumer_group_lag_slope",
+        "Lag least-squares slope over the scan history (positive = falling behind)",
+        trend, lagLabels, "slope"))
       .mkString("\n") + "\n"
   }
 }

@@ -46,11 +46,8 @@ object GroupAnalytics {
     partitionLag(wm, go).groupBy(col("cluster"), col("grp"), col("topic"), col("s"))
       .agg(sum(col("lag")).as("lag"), count(lit(1)).as("partitions_with_lag"))
 
-  /** A3: per-(group, topic) total lag (overwatch_resources/groups.py:104-141). */
-  def groupTopicLag(wm: DataFrame, go: DataFrame): DataFrame =
-    groupTopicLag(lagByScan(wm, go))
-
-  /** A3 over a [[lagByScan]] frame: its latest-scan slice. */
+  /** A3: per-(group, topic) total lag (overwatch_resources/groups.py:104-141),
+    * the latest-scan slice of a [[lagByScan]] frame. */
   def groupTopicLag(lagByScan: DataFrame): DataFrame =
     lagByScan.filter(col("s") === NumScans)
       .select(col("cluster"), col("grp"), col("topic"), col("lag").as("total_lag"),
@@ -65,11 +62,8 @@ object GroupAnalytics {
     * (n·Σsy − Σs·Σy) / (n·Σs² − (Σs)²): every accumulator is a BIGINT
     * (order-free on any partitioning); the single double division at
     * the end is deterministic on every engine. Two shuffles: the per-scan
-    * lag aggregation ([[lagByScan]]) and the per-series regression
-    * aggregation (one key prefix apart). */
-  def lagTrend(wm: DataFrame, go: DataFrame): DataFrame = lagTrend(lagByScan(wm, go))
-
-  /** The lag trend over a [[lagByScan]] frame. */
+    * lag aggregation ([[lagByScan]], the frame this reads) and the
+    * per-series regression aggregation (one key prefix apart). */
   def lagTrend(lagByScan: DataFrame): DataFrame = {
     val num = col("n") * col("sxy") - col("sx") * col("sy")
     val den = col("n") * col("sxx") - col("sx") * col("sx")
@@ -96,11 +90,8 @@ object GroupAnalytics {
         max(col("lag")).as("max_lag"))
 
   /** The reference's `groups_df`: name, members, state, eval_elapsed_time,
-    * overall_lag (A4: sum over topics, overwatch_resources/groups.py:95). */
-  def groupsDf(wm: DataFrame, go: DataFrame, gd: DataFrame): DataFrame =
-    groupsDf(lagByScan(wm, go), gd)
-
-  /** `groups_df` over a [[lagByScan]] frame and the groups dimension. */
+    * overall_lag (A4: sum over topics, overwatch_resources/groups.py:95),
+    * over a [[lagByScan]] frame and the groups dimension. */
   def groupsDf(lagByScan: DataFrame, gd: DataFrame): DataFrame = {
     val overall = lagByScan.filter(col("s") === NumScans)
       .groupBy(col("cluster"), col("grp"))

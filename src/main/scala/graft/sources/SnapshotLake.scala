@@ -17,6 +17,14 @@ import org.apache.spark.sql.functions._
   */
 object SnapshotLake {
 
+  /** Writes the snapshot of `sfDir` as a lake under `lakeDir`: its
+    * watermarks in `watermarks/`, its group offsets in `group_offsets/`,
+    * the two tables a service tick reads. */
+  def write(spark: SparkSession, sfDir: String, lakeDir: String): Unit = {
+    writeWatermarks(Snapshots.watermarks(spark, sfDir), s"$lakeDir/watermarks")
+    writeGroupOffsets(Snapshots.groupOffsets(spark, sfDir), s"$lakeDir/group_offsets")
+  }
+
   def writeWatermarks(wm: DataFrame, path: String): Unit =
     wm.write.mode("overwrite")
       .partitionBy("cluster", "s")

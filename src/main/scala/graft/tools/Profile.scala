@@ -126,8 +126,8 @@ private final class SchedulerCounts extends SparkListener {
   *  - `warmup` releases the derivations built so far, runs the warmup
   *    and prints its makespan, the pool size and each derivation's wall,
   *    executor CPU and executor run seconds in report order;
-  *  - `tick [n]` writes the snapshot lake of the sf dir, as `GraftApp
-  *    --lake` does, then runs n (default 8) lake-mode `runCluster` calls
+  *  - `tick [n]` writes the snapshot lake of the sf dir once, as
+  *    `GraftApp` does, then runs n (default 8) `runCluster` calls over it
   *    of one tick each, on c1 and c2 in turn, and prints one line per
   *    tick: its wall time, the SQL executions, physical-plan-description
   *    characters and SQL plan metrics it added to the SQL status store,
@@ -217,8 +217,7 @@ object Profile extends AdaptiveSparkPlanHelper {
       last
     }
     try {
-      SnapshotLake.writeWatermarks(Snapshots.watermarks(s, dir), s"$lake/watermarks")
-      SnapshotLake.writeGroupOffsets(Snapshots.groupOffsets(s, dir), s"$lake/group_offsets")
+      SnapshotLake.write(s, dir, lake.toString)
       (1 to n).foreach { i =>
         val cluster = Snapshots.Clusters((i - 1) % Snapshots.Clusters.size)
         val lastId = (-1L +: store.executionsList().map(_.executionId)).max

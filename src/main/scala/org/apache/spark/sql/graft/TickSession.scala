@@ -19,7 +19,10 @@ import scala.util.chaining._
   *    a job per shuffle stage or a re-planned plan per execution kept in
   *    the SQL status store.
   * The clone shares the caller's context and cache manager; setting its
-  * conf never touches the caller's.
+  * conf never touches the caller's. A service tick reads the snapshot
+  * lake on the clone; the shared derivations it reads (the groups
+  * dimension and the schema registry tables) are built on the caller and
+  * re-bound into the clone with [[rebind]].
   *
   * One clone serves every call for a caller while the caller's conf and
   * query execution listeners stay as they were when it was cloned; a

@@ -91,14 +91,14 @@ class AppSpec extends AnyFunSuite {
   test("prometheus exposition renders the reference gauge catalog") {
     val dir = TestSpark.Sf0001
     val wm = Snapshots.watermarks(spark, dir)
-    val go = Snapshots.groupOffsets(spark, dir)
+    val lag = GroupAnalytics.lagByScan(wm, Snapshots.groupOffsets(spark, dir))
     val text = MetricsExposition.exposition(
       TopicAnalytics.clusterTotals(wm, Snapshots.groupsDim(spark, dir)),
-      GroupAnalytics.groupTopicLag(wm, go),
+      GroupAnalytics.groupTopicLag(lag),
       graft.operators.SchemaRegistryOps.counts(Snapshots.srSubjects(spark, dir),
         wm.filter(org.apache.spark.sql.functions.col("s") === Snapshots.NumScans)),
       Deltas.partitionDeltas(wm),
-      lagTrend = Some(GroupAnalytics.lagTrend(wm, go)))
+      GroupAnalytics.lagTrend(lag))
     assert(text.contains("# TYPE kafka_overwatch_cluster_topics_count gauge"))
     assert(text.contains("# TYPE kafka_overwatch_consumer_group_lag_slope gauge"))
     assert(text.contains("""kafka_overwatch_consumer_group_lag_slope{cluster="c1",grp="g_active""""))
@@ -132,13 +132,13 @@ class AppSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, max_by}
     val dir = TestSpark.Sf0001
     val wm = Snapshots.watermarks(spark, dir)
-    val go = Snapshots.groupOffsets(spark, dir)
+    val byScan = GroupAnalytics.lagByScan(wm, Snapshots.groupOffsets(spark, dir))
     val totals = TopicAnalytics.clusterTotals(wm, Snapshots.groupsDim(spark, dir))
-    val lag = GroupAnalytics.groupTopicLag(wm, go)
+    val lag = GroupAnalytics.groupTopicLag(byScan)
     val sr = graft.operators.SchemaRegistryOps.counts(Snapshots.srSubjects(spark, dir),
       wm.filter(col("s") === Snapshots.NumScans))
     val deltas = Deltas.partitionDeltas(wm)
-    val trend = GroupAnalytics.lagTrend(wm, go)
+    val trend = GroupAnalytics.lagTrend(byScan)
     val latestDelta = deltas.groupBy(col("cluster"), col("topic"), col("partition_id"))
       .agg(max_by(col("delta"), col("scan_ts")).as("delta"))
     import MetricsExposition.gauge
@@ -160,13 +160,12 @@ class AppSpec extends AnyFunSuite {
       gauge("kafka_overwatch_consumer_group_lag_slope",
         "Lag least-squares slope over the scan history (positive = falling behind)",
         trend, Seq("cluster", "grp", "topic"), "slope")).mkString("\n") + "\n"
-    val got = MetricsExposition.exposition(totals, lag, sr, deltas, lagTrend = Some(trend))
+    val got = MetricsExposition.exposition(totals, lag, sr, deltas, trend)
     assert(got === expected)
   }
 
   test("runCluster releases the frames its ticks persisted and keeps the snapshot memo") {
     import org.apache.spark.storage.StorageLevel
-    import graft.sources.SnapshotLake
     val dir = TestSpark.Sf0001
     def cached(df: org.apache.spark.sql.DataFrame): Boolean =
       df.storageLevel != StorageLevel.NONE // a cacheManager lookup by plan
@@ -175,42 +174,34 @@ class AppSpec extends AnyFunSuite {
     // by every session of the context and matches by plan, so another
     // suite invalidating its memo can uncache the shared session's
     val s = isolated()
-    // fixture mode: the tick's watermarks and offsets are the memoized
-    // Snapshots frames, which must stay cached through and after the ticks
-    assert(cached(Snapshots.watermarks(s, dir)) && cached(Snapshots.groupOffsets(s, dir)))
-    val memoProbe = new Probe(() => Snapshots.cachedFrames(s, dir).map(cached))
-    graft.app.GraftApp.runCluster(s, cfg, dir,
-      java.nio.file.Files.createTempDirectory("graft-app-memo").toString,
-      ticks = 2, channels = Seq(memoProbe))
+    val tickRdds = newPersistentRdds(s, dir)
+    assert(tickRdds().isEmpty)
     val memo = Snapshots.cachedFrames(s, dir)
     assert(memo.exists(_ eq Snapshots.watermarks(s, dir)))
     assert(memo.exists(_ eq Snapshots.groupOffsets(s, dir)))
-    assert(memo.forall(cached), "a tick released a memoized snapshot frame")
-    assert(memoProbe.seen.size === 2 && memoProbe.seen.forall(_.forall(identity)))
-
-    // lake mode: each tick checkpoints the watermarks and offsets it reads
+    val keys = SparkEntry.memoKeyCount(s)
+    // with no lake given runCluster writes one from the Snapshots memo;
+    // either way each tick checkpoints the watermarks and offsets it reads
     // from the lake, their per-scan lag and the report's topics/groups
     // tables, and releases every one of them on return
-    val lake = java.nio.file.Files.createTempDirectory("graft-lake-lifecycle").toString
-    SnapshotLake.writeWatermarks(Snapshots.watermarks(s, dir), s"$lake/watermarks")
-    SnapshotLake.writeGroupOffsets(Snapshots.groupOffsets(s, dir), s"$lake/group_offsets")
-    val tickRdds = newPersistentRdds(s, dir)
-    assert(tickRdds().isEmpty)
-    val keys = SparkEntry.memoKeyCount(s)
-    val lakeProbe = new Probe(() => (tickRdds().size, org.apache.spark.sql.SparkSession.active))
-    graft.app.GraftApp.runCluster(s, cfg, dir,
-      java.nio.file.Files.createTempDirectory("graft-app-lake-lifecycle").toString,
-      ticks = 2, channels = Seq(lakeProbe), lakeDir = Some(lake))
-    assert(lakeProbe.seen.map(_._1) === Vector(5, 5),
-      "a tick did not hold exactly its 5 checkpointed frames")
-    assert(tickRdds().isEmpty, "a tick frame outlived runCluster")
-    assert(memo.forall(cached))
-    // the ticks read every derivation on the caller's session: none was
-    // built for the tick session, and the caller's were built before
-    val tickSession = lakeProbe.seen.head._2
-    assert(tickSession ne s)
-    assert(SparkEntry.memoKeyCount(tickSession) === 0, "a derivation was built in the tick session")
-    assert(SparkEntry.memoKeyCount(s) === keys, "a tick rebuilt a derivation")
+    Seq(None, Some(writeLake(s, dir))).foreach { lakeDir =>
+      val probe = new Probe(() =>
+        (tickRdds().size, memo.forall(cached), org.apache.spark.sql.SparkSession.active))
+      graft.app.GraftApp.runCluster(s, cfg, dir,
+        java.nio.file.Files.createTempDirectory("graft-app-lifecycle").toString,
+        ticks = 2, channels = Seq(probe), lakeDir = lakeDir)
+      assert(probe.seen.map(_._1) === Vector(5, 5),
+        s"lake $lakeDir: a tick did not hold exactly its 5 checkpointed frames")
+      assert(tickRdds().isEmpty, s"lake $lakeDir: a tick frame outlived runCluster")
+      assert(probe.seen.forall(_._2) && memo.forall(cached),
+        s"lake $lakeDir: a tick released a memoized snapshot frame")
+      // the ticks read every derivation on the caller's session: none was
+      // built for the tick session, and the caller's were built before
+      val tickSession = probe.seen.head._3
+      assert(tickSession ne s)
+      assert(SparkEntry.memoKeyCount(tickSession) === 0, "a derivation was built in the tick session")
+      assert(SparkEntry.memoKeyCount(s) === keys, "a tick rebuilt a derivation")
+    }
   }
 
   test("a lake-mode tick's gauges and report equal the compiled path's over the same lake") {
@@ -234,7 +225,7 @@ class AppSpec extends AnyFunSuite {
     val lag = GroupAnalytics.lagByScan(wm, go)
     val exposition = MetricsExposition.exposition(TopicAnalytics.clusterTotals(wm, gd),
       GroupAnalytics.groupTopicLag(lag), Snapshots.srRegistryCounts(s, dir),
-      Deltas.partitionDeltas(wm), lagTrend = Some(GroupAnalytics.lagTrend(lag)))
+      Deltas.partitionDeltas(wm), GroupAnalytics.lagTrend(lag))
     // the gauge lines in any order; the latency summaries are timings
     val prom = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$out/metrics_c1.prom"))
     assert(prom.linesIterator.filterNot(_.contains("_describe_latency")).toSeq.sorted ===
@@ -299,12 +290,9 @@ class AppSpec extends AnyFunSuite {
 
   test("a failing tick action fails runCluster with its own exception and leaves nothing held") {
     import scala.jdk.CollectionConverters._
-    import graft.sources.SnapshotLake
     val dir = TestSpark.Sf0001
     val s = isolated()
-    val lake = java.nio.file.Files.createTempDirectory("graft-lake-failing").toString
-    SnapshotLake.writeWatermarks(Snapshots.watermarks(s, dir), s"$lake/watermarks")
-    SnapshotLake.writeGroupOffsets(Snapshots.groupOffsets(s, dir), s"$lake/group_offsets")
+    val lake = writeLake(s, dir)
     // the report action fails after its exports, while the gauges may
     // still be collecting
     val down = new IllegalStateException("notification channel down")
@@ -336,14 +324,10 @@ class AppSpec extends AnyFunSuite {
   private val cfg = app.ClusterConfig("c1",
     reporting = app.ReportingConfig(evaluationPeriodSeconds = 0L))
 
-  /** A snapshot lake of `dir`, written as `GraftApp --lake` writes it. */
-  private def writeLake(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val lake = java.nio.file.Files.createTempDirectory("graft-lake").toString
-    graft.sources.SnapshotLake.writeWatermarks(Snapshots.watermarks(s, dir), s"$lake/watermarks")
-    graft.sources.SnapshotLake.writeGroupOffsets(Snapshots.groupOffsets(s, dir),
-      s"$lake/group_offsets")
-    lake
-  }
+  /** A snapshot lake of `dir`, written as `GraftApp` writes it. */
+  private def writeLake(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    java.nio.file.Files.createTempDirectory("graft-lake").toString
+      .tap(graft.sources.SnapshotLake.write(s, dir, _))
 
   /** A session with its own memo and the shared session's settings. */
   private def isolated(): org.apache.spark.sql.SparkSession = {
@@ -354,11 +338,13 @@ class AppSpec extends AnyFunSuite {
     s
   }
 
-  /** Builds the snapshot declarations a lake-mode tick reads, then returns
-    * a probe of the persistent RDDs created since: only a tick's own. */
+  /** Builds the snapshot declarations a tick reads or writes its lake
+    * from, then returns a probe of the persistent RDDs created since: only
+    * a tick's own. */
   private def newPersistentRdds(s: org.apache.spark.sql.SparkSession,
                                 dir: String): () => Set[Int] = {
-    Seq(Snapshots.groupsDim(s, dir), Snapshots.srSubjects(s, dir),
+    Seq(Snapshots.watermarks(s, dir), Snapshots.groupOffsets(s, dir),
+      Snapshots.groupsDim(s, dir), Snapshots.srSubjects(s, dir),
       Snapshots.srRegistryCounts(s, dir)).foreach(_.count())
     val before = s.sparkContext.getPersistentRDDs.keySet
     () => s.sparkContext.getPersistentRDDs.keySet.toSet -- before
@@ -368,10 +354,7 @@ class AppSpec extends AnyFunSuite {
     import graft.sources.SnapshotLake
     val lake = java.nio.file.Files.createTempDirectory("graft-lake-app").toString
     val out = java.nio.file.Files.createTempDirectory("graft-app-lake-out").toString
-    SnapshotLake.writeWatermarks(
-      Snapshots.watermarks(spark, TestSpark.Sf0001), s"$lake/watermarks")
-    SnapshotLake.writeGroupOffsets(
-      Snapshots.groupOffsets(spark, TestSpark.Sf0001), s"$lake/group_offsets")
+    SnapshotLake.write(spark, TestSpark.Sf0001, lake)
     // lake round-trip is loss-free (canonical column order/types restored
     // on read; nullability legitimately widens through parquet)
     val back = SnapshotLake.readWatermarks(spark, s"$lake/watermarks")

@@ -53,6 +53,7 @@ class BenchSpec extends AnyFunSuite {
       val full = mapper.readTree(new String(Files.readAllBytes(sidecar), "UTF-8"))
       assert(!full.has("settle") && !full.has("first_pass"))
       assert(full.get("failed").elements.asScala.map(_.asText).toSeq === Seq(Throws))
+      assert(full.get("foreign_cores").asDouble >= 0.0 && full.get("contended").isBoolean)
       val medians = full.get("queries")
       val spread = full.get("spread")
       val executor = full.get("executor")
@@ -89,5 +90,26 @@ class BenchSpec extends AnyFunSuite {
       try paths.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
       finally paths.close()
     }
+  }
+
+  test("contended is decided from the CPU other processes used during the run") {
+    import Bench.{CpuReading, contended, foreignCores}
+    // a 4-CPU host read 10 s apart: 4,000 jiffies pass in all
+    def window(hostBusy: Long, processS: Double) =
+      foreignCores(CpuReading(0L, 0L, 4, 0L, 0L),
+        CpuReading(hostBusy, 4000L, 4, (processS * 1e9).toLong, 10000000000L))
+    // the bench alone, on every core or on one: nobody else ran
+    assert(window(4000L, 40.0) === 0.0 && window(1000L, 10.0) === 0.0)
+    assert(!contended(window(4000L, 40.0), 4))
+    // the host busy 3.2 cores, the bench 1: others kept 2.2 busy
+    assert(math.abs(window(3200L, 10.0) - 2.2) < 1e-9)
+    assert(contended(window(3200L, 10.0), 4))
+    // exactly half the run's cores is not contended
+    assert(!contended(window(3000L, 10.0), 4))
+    // the JVM's clock reading above the host's busy share is no negative
+    // load, and a host that could not be read counts as quiet
+    assert(window(1000L, 12.0) === 0.0)
+    assert(foreignCores(CpuReading(0L, 0L, 0, 0L, 0L), CpuReading(0L, 0L, 0, 5000000000L,
+      10000000000L)) === 0.0)
   }
 }

@@ -58,7 +58,7 @@ class MultiClusterSpec extends AnyFunSuite {
   }
 
   test("group lag per cluster is independent") {
-    val combined = GroupAnalytics.groupsDf(both, goBoth, gdBoth)
+    val combined = GroupAnalytics.groupsDf(GroupAnalytics.lagByScan(both, goBoth), gdBoth)
     assert(combined.select("cluster").distinct().count() === 3)
     val lag = (c: String) => combined
       .filter($"cluster" === c && $"name" === "g_active")

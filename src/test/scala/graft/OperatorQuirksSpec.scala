@@ -52,7 +52,7 @@ class OperatorQuirksSpec extends AnyFunSuite {
   }
 
   test("P12 guard: zero-message partitions contribute no lag") {
-    val g2 = GroupAnalytics.groupsDf(microWm, microGo, microGd)
+    val g2 = GroupAnalytics.groupsDf(GroupAnalytics.lagByScan(microWm, microGo), microGd)
       .filter($"name" === "g2").collect()(0)
     assert(g2.getAs[Long]("overall_lag") === 0L)
   }

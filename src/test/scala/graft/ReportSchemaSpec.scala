@@ -110,7 +110,8 @@ class ReportSchemaSpec extends AnyFunSuite {
     val go = Snapshots.groupOffsets(spark, dir)
     val gd = Snapshots.groupsDim(spark, dir)
     val rpt = ClusterReporting.clusterReport("c1",
-      TopicAnalytics.topicsDf(wm, go, gd), GroupAnalytics.groupsDf(wm, go, gd),
+      TopicAnalytics.topicsDf(wm, go, gd),
+      GroupAnalytics.groupsDf(GroupAnalytics.lagByScan(wm, go), gd),
       Snapshots.srSubjects(spark, dir), wm,
       java.time.Instant.ofEpochSecond(1700000180L))
     val mapper = new ObjectMapper()

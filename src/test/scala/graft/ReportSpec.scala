@@ -16,7 +16,7 @@ class ReportSpec extends AnyFunSuite {
     val go = Snapshots.groupOffsets(spark, dir)
     val gd = Snapshots.groupsDim(spark, dir)
     val topics = TopicAnalytics.topicsDf(wm, go, gd)
-    val groups = GroupAnalytics.groupsDf(wm, go, gd)
+    val groups = GroupAnalytics.groupsDf(GroupAnalytics.lagByScan(wm, go), gd)
     val rpt = ClusterReporting.clusterReport("c1", topics, groups,
       Snapshots.srSubjects(spark, dir), wm,
       java.time.Instant.ofEpochSecond(1700000180L))
