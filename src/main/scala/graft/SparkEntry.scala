@@ -1133,9 +1133,12 @@ object SparkEntry {
                                  cpu: Seq[(String, Double)],
                                  run: Seq[(String, Double)])
 
-  /** The warmup pool's size: a quarter of the session's cores, 1 to 8. */
+  /** The warmup pool's size: one thread per session core, 1 to 8. Most
+    * derivations run a few small jobs with an idle driver between them,
+    * so on a few cores independent derivations overlap; 8 bounds the
+    * derivations in flight on a large host. */
   private[graft] def warmupThreads(s: SparkSession): Int =
-    math.max(1, math.min(8, s.sparkContext.defaultParallelism / 4))
+    math.max(1, math.min(8, s.sparkContext.defaultParallelism))
 
   /** Materializes every memoized shared derivation (snapshot tables,
     * topics/groups analytic tables, the jaccard pair set + clusters) and

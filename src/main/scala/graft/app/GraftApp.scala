@@ -49,28 +49,65 @@ import scala.util.chaining._
   * derivation is built for the tick session. Lake reads and every frame
   * the tick derives belong to the tick session.
   *
-  * A tick works from one snapshot (`runCluster`): the scan reads the
-  * filtered watermarks and group offsets from the lake once and derives
-  * the per-scan lag from them; the report derives its topics/groups
-  * tables once for its collect and all exports. Each of those five frames
-  * is held as an eager local checkpoint, so every plan over it scans the
-  * materialized rows and carries no lineage. Once the snapshot is held,
-  * the gauge collects and the report run side by side on the loop's
-  * action pool; the `.prom` file and the HTTP update land before the tick
-  * ends. The tick releases what it checkpointed at the next scan and when
-  * `runCluster` returns, dependents first; it holds no frame it did not
-  * checkpoint itself. A local checkpoint cannot be recomputed: if an
-  * executor is lost mid-tick, that tick fails and the next scan reads
-  * again. A failing action fails its tick with its own exception once the
-  * tick's other actions have ended.
+  * A tick runs its actions as one dependency DAG on the loop's action
+  * pool (`Scheduler.Actions`): each action starts once the frames it
+  * reads are held, so independent actions run side by side. The scan
+  * reads the filtered watermarks and the group offsets from the lake side
+  * by side and derives the per-scan lag from both. Each gauge collect
+  * waits only for its own frame (cluster totals and deltas for the
+  * watermarks, group lag and trend for the lag, the registry counts for
+  * nothing), and the `.prom` file and the HTTP update follow the five
+  * collects. The report derives its topics table from the watermarks and
+  * offsets and its groups table from the lag; the report JSON reads both,
+  * each export only its own table, and the notification follows the JSON
+  * and both exports. Those five frames (watermarks, offsets, lag, topics,
+  * groups) are each held as an eager local checkpoint, so every plan over
+  * them scans the materialized rows and carries no lineage. The tick
+  * releases what it checkpointed at the next scan and when `runCluster`
+  * returns, dependents first; it holds no frame it did not checkpoint
+  * itself. A local checkpoint cannot be recomputed: if an executor is
+  * lost mid-tick, that tick fails and the next scan reads again. A
+  * failing action skips the actions that read it; the tick fails with the
+  * first failed action's own exception once its other actions have
+  * ended.
   *
-  * Usage: GraftApp <config.yaml> <sfDir> <outDir> [<ticks> [--lake <dir>] [--streaming]]
+  * Usage: GraftApp <config.yaml> <sfDir> <outDir> [<ticks>] [--lake <dir>] [--streaming]
   * (`--lake` picks the lake directory, default `<outDir>/lake`)
   */
 object GraftApp {
-  def main(args: Array[String]): Unit = {
-    val Array(configPath, sfDir, outDir) = args.take(3)
-    val ticks = args.lift(3).map(_.toInt).getOrElse(1)
+  /** `main`'s command line: the three required arguments, then in any
+    * order an optional tick count (default 1), `--lake <dir>` (default
+    * `<outDir>/lake`) and `--streaming`. The tick count is the first
+    * further argument that is neither a flag nor a flag's value. */
+  final case class Args(configPath: String, sfDir: String, outDir: String,
+                        ticks: Int, lake: String, streaming: Boolean)
+
+  object Args {
+    val Usage =
+      "usage: GraftApp <config.yaml> <sfDir> <outDir> [<ticks>] [--lake <dir>] [--streaming]"
+
+    def parse(args: Seq[String]): Args = {
+      require(args.size >= 3 && args.take(3).forall(!_.startsWith("--")), Usage)
+      val Seq(configPath, sfDir, outDir) = args.take(3)
+      @scala.annotation.tailrec
+      def options(rest: List[String], ticks: Option[Int], lake: Option[String],
+                  streaming: Boolean): Args = rest match {
+        case Nil => Args(configPath, sfDir, outDir, ticks.getOrElse(1),
+          lake.getOrElse(s"$outDir/lake"), streaming)
+        case "--lake" :: dir :: tail if !dir.startsWith("--") =>
+          options(tail, ticks, Some(dir), streaming)
+        case "--streaming" :: tail => options(tail, ticks, lake, streaming = true)
+        case n :: tail if ticks.isEmpty && n.toIntOption.isDefined =>
+          options(tail, n.toIntOption, lake, streaming)
+        case other :: _ =>
+          throw new IllegalArgumentException(s"unexpected argument '$other'\n$Usage")
+      }
+      options(args.drop(3).toList, None, None, streaming = false)
+    }
+  }
+
+  def main(argv: Array[String]): Unit = {
+    val Args(configPath, sfDir, outDir, ticks, lake, streaming) = Args.parse(argv.toSeq)
     val config = GraftConfig.parse(Files.readString(Paths.get(configPath)))
     val cpus = graft.tools.ToolSession.cpus
     val spark = SparkSession.builder()
@@ -92,12 +129,8 @@ object GraftApp {
          ch.ignoreErrors)) ++
        config.smtpChannels.map(ch => ch.name -> new Notifications.SmtpChannel(
          ch.name, ch.host, ch.port, ch.mailFrom, ch.mailTo))).toMap
-    // the partitioned snapshot lake every tick reads, written once
-    val lake = args.indexOf("--lake") match {
-      case i if i >= 0 && i + 1 < args.length => args(i + 1)
-      case _ => s"$outDir/lake"
-    }
     try {
+      // the partitioned snapshot lake every tick reads, written once
       SnapshotLake.write(spark, sfDir, lake)
       config.clusters.foreach { c =>
         val channels = c.reporting.notificationChannels.flatMap(channelDefs.get)
@@ -107,7 +140,7 @@ object GraftApp {
       // a long-lived service looping over dirs must not accumulate dead
       // cached blocks per (session, dir) (SparkEntry.invalidate scaladoc)
       graft.SparkEntry.invalidate(spark, sfDir)
-      if (args.contains("--streaming")) runStreaming(spark, sfDir, outDir)
+      if (streaming) runStreaming(spark, sfDir, outDir)
     } finally { http.foreach(_.stop()); spark.stop() }
   }
 
@@ -135,14 +168,6 @@ object GraftApp {
     q.stop()
     val out = spark.read.parquet(s"$outDir/stream_deltas")
     System.err.println(s"[graft] streaming mode: ${out.count()} delta rows")
-  }
-
-  /** The snapshot one tick works from: filtered watermarks, group offsets,
-    * the groups dimension and the per-scan lag, as the tick's scan read
-    * and derived them. */
-  private final case class TickSnapshot(wm: DataFrame, go: DataFrame, gd: DataFrame,
-                                        lag: DataFrame) {
-    val latest: DataFrame = wm.filter(col("s") === Snapshots.NumScans)
   }
 
   def runCluster(spark: SparkSession, cluster: ClusterConfig, sfDir: String,
@@ -178,87 +203,95 @@ object GraftApp {
       df.localCheckpoint(eager = true).tap(_.queryExecution.logical match {
         case r: LogicalRDD => held.synchronized(held += r.rdd)
       })
-    // dependents first (topics/groups, then lag, then watermarks/offsets)
+    // dependents first: checkpoints complete in a topological order
     def release(): Unit = held.synchronized {
       held.reverseIterator.foreach(CheckpointRelease.release)
       held.clear()
     }
 
-    def scan(): TickSnapshot = {
-      release() // the previous tick's frames
-      // the lake reads are forced inside the timed sections
-      val wm = topicsLatency.time(hold(Scheduler.applyTopicFilters(
-        SnapshotLake.readWatermarks(tickSession, s"$lake/watermarks"),
-        cluster.topicIncludeRegexes, cluster.topicExcludeRegexes)))
-      val go = groupsLatency.time(hold(
-        SnapshotLake.readGroupOffsets(tickSession, s"$lake/group_offsets")))
-      TickSnapshot(wm, go, derived(Snapshots.groupsDim), hold(GroupAnalytics.lagByScan(wm, go)))
-    }
-
-    // the gauge collects run side by side on the action pool
-    def expose(snapshot: TickSnapshot): Unit = {
-      val TickSnapshot(wm, _, gd, lag) = snapshot
-      val labels = Seq("cluster" -> cluster.name)
-      val text = MetricsExposition.exposition(
-        TopicAnalytics.clusterTotals(wm, gd),
-        GroupAnalytics.groupTopicLag(lag),
-        derived(Snapshots.srRegistryCounts),
-        Deltas.partitionDeltas(wm),
-        GroupAnalytics.lagTrend(lag),
-        run = actions.all(_)) +
-        topicsLatency.render(labels) + "\n" +
-        groupsLatency.render(labels) + "\n"
-      Files.writeString(Paths.get(s"$outDir/metrics_${cluster.name}.prom"), text)
-      http.foreach(_.update(text))
-    }
-
-    // the report describes the snapshot this tick's scan just took
-    def report(snapshot: TickSnapshot): Unit = {
-      val TickSnapshot(wm, go, gd, lag) = snapshot
-      val topics = hold(TopicAnalytics.topicsDf(wm, go, gd))
-      val groups = hold(GroupAnalytics.groupsDf(lag, gd))
-      val gov = cluster.governance
-      val rpt = ClusterReporting.clusterReport(cluster.name, topics, groups,
-        derived(Snapshots.srSubjects), snapshot.latest,
-        java.time.Instant.now(),
-        topicCompliant = if (gov.topicCompliantRegexes.nonEmpty)
-          gov.topicCompliantRegexes else graft.operators.Governance.DefaultCompliant,
-        topicExcluded = if (gov.topicExcludedRegexes.nonEmpty)
-          gov.topicExcludedRegexes else graft.operators.Governance.DefaultExcluded,
-        groupCompliant = if (gov.groupCompliantRegexes.nonEmpty)
-          gov.groupCompliantRegexes else Seq("^[a-z]+$"),
-        groupExcluded = if (gov.groupExcludedRegexes.nonEmpty)
-          gov.groupExcludedRegexes else Seq("^g_dead"))
-      val json = ClusterReporting.reportJson(rpt)
-      val local = Paths.get(s"$outDir/report_${cluster.name}.json")
-      Files.writeString(local, json)
-      // scheme-qualified output_directory -> remote upload with retry
-      // (s3a:// in production, file:// in tests) — K3
-      val reportUrl = if (cluster.reporting.outputDirectory.contains("://")) {
-        val dest = s"${cluster.reporting.outputDirectory}/report_${cluster.name}.json"
-        graft.report.RemotePut.put(
-          json.getBytes(java.nio.charset.StandardCharsets.UTF_8), dest)
-        dest
-      } else local.toUri.toString
-      ClusterReporting.exportDf(topics, outDir, s"topics_${cluster.name}",
-        cluster.reporting.exportsFormats)
-      ClusterReporting.exportDf(groups, outDir, s"groups_${cluster.name}",
-        cluster.reporting.exportsFormats)
-      Notifications.notifyReport(channels, cluster.name,
-        java.time.Instant.now().toString, reportUrl)
-    }
-
     def tick(reportDue: Boolean): Unit = {
-      val snapshot = scan()
-      val reportRun = Option.when(reportDue)(actions.submit(report(snapshot)))
-      val exposed = scala.util.Try(expose(snapshot))
-      // the report ends before the tick does, whether or not the gauges failed
-      val reported = reportRun.map(r => scala.util.Try(Scheduler.await(r)))
-      exposed.get
-      reported.foreach(_.get)
+      release() // the previous tick's frames
+      val gd = derived(Snapshots.groupsDim)
+      actions.run { dag =>
+        import dag.after
+        // the scan: the lake reads are forced inside the timed sections
+        val wm = after()(topicsLatency.time(hold(Scheduler.applyTopicFilters(
+          SnapshotLake.readWatermarks(tickSession, s"$lake/watermarks"),
+          cluster.topicIncludeRegexes, cluster.topicExcludeRegexes))))
+        val go = after()(groupsLatency.time(hold(
+          SnapshotLake.readGroupOffsets(tickSession, s"$lake/group_offsets"))))
+        val lag = after(wm, go)(hold(GroupAnalytics.lagByScan(wm.join(), go.join())))
+
+        // the gauges: each collect waits only for its own frame
+        val totals = after(wm)(MetricsExposition.totalsRows(
+          TopicAnalytics.clusterTotals(wm.join(), gd)))
+        val lagRows = after(lag)(MetricsExposition.lagRows(
+          GroupAnalytics.groupTopicLag(lag.join())))
+        val sr = after()(MetricsExposition.srRows(derived(Snapshots.srRegistryCounts)))
+        val deltas = after(wm)(MetricsExposition.deltaRows(Deltas.partitionDeltas(wm.join())))
+        val trend = after(lag)(MetricsExposition.trendRows(GroupAnalytics.lagTrend(lag.join())))
+        after(totals, lagRows, sr, deltas, trend) {
+          val labels = Seq("cluster" -> cluster.name)
+          val text = MetricsExposition.render(totals.join(), lagRows.join(), sr.join(),
+            deltas.join(), trend.join()) +
+            topicsLatency.render(labels) + "\n" +
+            groupsLatency.render(labels) + "\n"
+          Files.writeString(Paths.get(s"$outDir/metrics_${cluster.name}.prom"), text)
+          http.foreach(_.update(text))
+        }
+
+        // the report describes the snapshot this tick's scan just took
+        if (reportDue) {
+          val topics = after(wm, go)(hold(TopicAnalytics.topicsDf(wm.join(), go.join(), gd)))
+          val groups = after(lag)(hold(GroupAnalytics.groupsDf(lag.join(), gd)))
+          val reportUrl = after(wm, topics, groups)(writeReport(cluster, outDir,
+            ClusterReporting.reportJson(clusterReport(cluster, topics.join(), groups.join(),
+              derived(Snapshots.srSubjects), wm.join()))))
+          val exports = Seq(topics -> "topics", groups -> "groups").map { case (df, table) =>
+            after(df)(ClusterReporting.exportDf(df.join(), outDir,
+              s"${table}_${cluster.name}", cluster.reporting.exportsFormats))
+          }
+          after(reportUrl +: exports: _*)(Notifications.notifyReport(channels,
+            cluster.name, java.time.Instant.now().toString, reportUrl.join()))
+        }
+      }
     }
 
     try loop.loop(reportDue => tick(reportDue), Some(ticks))
     finally try release() finally actions.shutdown()
+  }
+
+  /** The cluster report over one tick's topics and groups tables, with
+    * `cluster`'s governance rules or the reference's defaults; `wm` is the
+    * tick's filtered watermarks, whose latest scan the report describes. */
+  private def clusterReport(cluster: ClusterConfig, topics: DataFrame, groups: DataFrame,
+                            srSubjects: DataFrame, wm: DataFrame): DataFrame = {
+    val gov = cluster.governance
+    ClusterReporting.clusterReport(cluster.name, topics, groups, srSubjects,
+      wm.filter(col("s") === Snapshots.NumScans),
+      java.time.Instant.now(),
+      topicCompliant = if (gov.topicCompliantRegexes.nonEmpty)
+        gov.topicCompliantRegexes else graft.operators.Governance.DefaultCompliant,
+      topicExcluded = if (gov.topicExcludedRegexes.nonEmpty)
+        gov.topicExcludedRegexes else graft.operators.Governance.DefaultExcluded,
+      groupCompliant = if (gov.groupCompliantRegexes.nonEmpty)
+        gov.groupCompliantRegexes else Seq("^[a-z]+$"),
+      groupExcluded = if (gov.groupExcludedRegexes.nonEmpty)
+        gov.groupExcludedRegexes else Seq("^g_dead"))
+  }
+
+  /** Writes the report JSON to `outDir`, and uploads it when the cluster's
+    * output directory is scheme-qualified; returns the report's URL. */
+  private def writeReport(cluster: ClusterConfig, outDir: String, json: String): String = {
+    val local = Paths.get(s"$outDir/report_${cluster.name}.json")
+    Files.writeString(local, json)
+    // scheme-qualified output_directory -> remote upload with retry
+    // (s3a:// in production, file:// in tests) — K3
+    if (cluster.reporting.outputDirectory.contains("://")) {
+      val dest = s"${cluster.reporting.outputDirectory}/report_${cluster.name}.json"
+      graft.report.RemotePut.put(
+        json.getBytes(java.nio.charset.StandardCharsets.UTF_8), dest)
+      dest
+    } else local.toUri.toString
   }
 }

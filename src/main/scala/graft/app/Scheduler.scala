@@ -2,8 +2,9 @@ package graft.app
 
 import java.util.concurrent.CompletableFuture
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ThreadLocals
+import scala.util.chaining._
 
 /** Scan/report cadence (W4/W5) — the reference's per-cluster loop
   * (kafka_overwatch/processing/clusters.py:80-122): scan every interval,
@@ -66,15 +67,11 @@ object Scheduler {
     }
   }
 
-  /** The pool one cluster loop runs its ticks' independent actions on.
-    * It starts a thread only when every thread it has is busy, and keeps
-    * its threads until `shutdown`, so it holds as many threads as actions
-    * ran at once (a tick runs its gauge collects and its report side by
-    * side). An action runs under the Spark local properties of the thread
-    * that submitted it, so its jobs carry that thread's job description
-    * and properties, with `spark` as its active session (a service tick
-    * passes its tick session). `shutdown` returns once every thread has
-    * ended. */
+  /** The pool one cluster loop runs its ticks' actions on, as a
+    * dependency DAG per tick (`run`). It starts a thread only when every
+    * thread it has is busy, and keeps its threads until `shutdown`, so it
+    * holds as many threads as actions ran at once. `shutdown` returns once
+    * every thread has ended. */
   final class Actions(spark: SparkSession, name: String) {
     private val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
     private val pool = new java.util.concurrent.ThreadPoolExecutor(
@@ -87,15 +84,44 @@ object Scheduler {
         t
       })
 
-    def submit[T](body: => T): CompletableFuture[T] =
-      SQLExecution.withThreadLocalCaptured(
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], pool)(body)
+    /** One DAG of actions. `declare` declares its nodes with `after` on the
+      * calling thread; each node starts on the pool once the nodes it reads
+      * have completed, so independent nodes run side by side. Every node
+      * runs under the Spark thread locals of the calling thread, captured
+      * once when `run` starts (its job description and local properties),
+      * with `spark` as its active session (a service tick passes its tick
+      * session), never under those of the pool thread that completed its
+      * last input. A failed node's dependents never start. `run` returns
+      * once every started node has ended; it throws the own exception of
+      * the first failed node in declaration order, if any, and otherwise
+      * returns what `declare` returned. */
+    def run[T](declare: Dag => T): T = {
+      val dag = new Dag(new ThreadLocals(spark))
+      val declared = scala.util.Try(declare(dag))
+      dag.await()
+      declared.get
+    }
 
-    /** Runs the bodies side by side and waits for every one of them, then
-      * returns their values in order, or throws the first failed one's
-      * own exception. */
-    def all[T](bodies: Seq[() => T]): Seq[T] =
-      bodies.map(b => submit(b())).map(f => scala.util.Try(await(f))).map(_.get)
+    final class Dag private[Actions] (locals: ThreadLocals) {
+      private val nodes = scala.collection.mutable.ArrayBuffer.empty[CompletableFuture[_]]
+
+      /** A node that runs `body` once every one of `inputs` has completed;
+        * the body reads their values with `join`. */
+      def after[T](inputs: CompletableFuture[_]*)(body: => T): CompletableFuture[T] =
+        CompletableFuture.allOf(inputs: _*)
+          .thenApplyAsync[T](_ => locals(body), pool)
+          .tap(nodes += _)
+
+      /** Waits for every node, then throws the first failed one's own
+        * exception. A node skipped for a failed input fails with that
+        * input's exception, and its input was declared before it. */
+      private[Actions] def await(): Unit = {
+        CompletableFuture.allOf(nodes.toSeq: _*).handle[Unit]((_, _) => ()).join()
+        nodes.find(_.isCompletedExceptionally).foreach { node =>
+          try node.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        }
+      }
+    }
 
     def shutdown(): Unit = {
       pool.shutdown()
@@ -103,8 +129,4 @@ object Scheduler {
       threads.forEach(_.join())
     }
   }
-
-  /** The future's value, or the exception its action threw. */
-  def await[T](f: CompletableFuture[T]): T =
-    try f.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
 }

@@ -17,8 +17,7 @@ object MetricsExposition {
   /** One gauge family from a DataFrame: label columns + one value column. */
   def gauge(name: String, help: String, df: DataFrame,
             labels: Seq[String], value: String): String =
-    gaugeRows(name, help, df.select((labels :+ value).map(col): _*).collect().toSeq,
-      labels, value)
+    gaugeRows(name, help, rows(df, labels :+ value), labels, value)
 
   /** One gauge family from collected rows, read by column name, so that
     * several families can share one collect of the same frame. */
@@ -49,36 +48,43 @@ object MetricsExposition {
       s"${name}_count$lbl $count", s"${name}_sum$lbl $sum").mkString("\n")
   }
 
+  // each frame projected to the columns its families render, as `gauge`
+  // projects it, and collected once
+  private def rows(df: DataFrame, names: Seq[String]): Seq[Row] =
+    df.select(names.map(col): _*).collect().toSeq
+  private val lagLabels = Seq("cluster", "grp", "topic")
+  private val deltaLabels = Seq("cluster", "topic", "partition_id")
+
+  /** The rows of the catalog's five frames, each collected by its own
+    * function so that a caller can collect each one as soon as its frame
+    * is ready; [[render]] turns them into the document. */
+  def totalsRows(clusterTotals: DataFrame): Seq[Row] =
+    rows(clusterTotals, Seq("cluster", "topics_count", "partitions_count",
+      "consumer_groups_count"))
+  def lagRows(groupTopicLag: DataFrame): Seq[Row] = rows(groupTopicLag, lagLabels :+ "total_lag")
+  def srRows(srCounts: DataFrame): Seq[Row] =
+    rows(srCounts, Seq("registry", "subjects_count", "schemas_count"))
+  def deltaRows(partitionDeltas: DataFrame): Seq[Row] =
+    rows(partitionDeltas.groupBy(deltaLabels.map(col): _*)
+      .agg(max_by(col("delta"), col("scan_ts")).as("delta")), deltaLabels :+ "delta")
+  def trendRows(lagTrend: DataFrame): Seq[Row] = rows(lagTrend, lagLabels :+ "slope")
+
   /** The reference's full cluster gauge catalog in one exposition document:
     * cluster totals (A5), per-(group, topic) lag (A3), SR counts (A11),
     * per-partition new-message deltas (W1, exposed as a gauge of the last
-    * interval), then the lag-trend slope. Each frame is collected once:
-    * the three cluster-total families share one collect of
+    * interval), then the lag-trend slope. Each frame is collected once, one
+    * after another: the three cluster-total families share one collect of
     * `clusterTotals`, the two registry families one collect of
-    * `srCounts`. `run` runs the collects and returns their rows in order;
-    * the default runs them one after another, a caller with a pool can
-    * run them side by side. */
+    * `srCounts`. */
   def exposition(clusterTotals: DataFrame, groupTopicLag: DataFrame,
                  srCounts: DataFrame, partitionDeltas: DataFrame,
-                 lagTrend: DataFrame,
-                 run: Seq[() => Seq[Row]] => Seq[Seq[Row]] = _.map(_()))
-      : String = {
-    val lagLabels = Seq("cluster", "grp", "topic")
-    val deltaLabels = Seq("cluster", "topic", "partition_id")
-    val latestDelta = partitionDeltas
-      .groupBy(deltaLabels.map(col): _*)
-      .agg(max_by(col("delta"), col("scan_ts")).as("delta"))
-    // each frame projected to the columns its families render, as `gauge`
-    // projects it
-    def cols(df: DataFrame, names: String*) = df.select(names.map(col): _*)
-    val frames = Seq(
-      cols(clusterTotals, "cluster", "topics_count", "partitions_count",
-        "consumer_groups_count"),
-      cols(groupTopicLag, lagLabels :+ "total_lag": _*),
-      cols(srCounts, "registry", "subjects_count", "schemas_count"),
-      cols(latestDelta, deltaLabels :+ "delta": _*),
-      cols(lagTrend, lagLabels :+ "slope": _*))
-    val Seq(totals, lag, sr, deltas, trend) = run(frames.map(f => () => f.collect().toSeq))
+                 lagTrend: DataFrame): String =
+    render(totalsRows(clusterTotals), lagRows(groupTopicLag), srRows(srCounts),
+      deltaRows(partitionDeltas), trendRows(lagTrend))
+
+  /** The document of [[exposition]] from its five frames' collected rows. */
+  def render(totals: Seq[Row], lag: Seq[Row], sr: Seq[Row], deltas: Seq[Row],
+             trend: Seq[Row]): String =
     Seq(
       gaugeRows("kafka_overwatch_cluster_topics_count", "Total topics per cluster",
         totals, Seq("cluster"), "topics_count"),
@@ -101,5 +107,4 @@ object MetricsExposition {
         "Lag least-squares slope over the scan history (positive = falling behind)",
         trend, lagLabels, "slope"))
       .mkString("\n") + "\n"
-  }
 }
