@@ -334,7 +334,8 @@ object SparkEntry {
       Governance.nonCompliant(topicsDf(s, dir)).orderBy(col("name"))),
     "q_governance_groups" -> ((s, dir) =>
       Governance.governed(groupsDf(s, dir),
-        compliant = Seq("^[a-z]+$"), excluded = Seq("^g_dead")).orderBy(col("name"))),
+        compliant = Governance.DefaultGroupCompliant,
+        excluded = Governance.DefaultGroupExcluded).orderBy(col("name"))),
     "q_sr_unused" -> ((s, dir) =>
       SchemaRegistryOps.unusedSubjects(Snapshots.srSubjects(s, dir),
         latestWm(s, dir)).orderBy(col("subject"))),

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.graft.{CheckpointRelease, TickSession}
+import org.apache.spark.sql.graft.{CheckpointRelease, SessionClones, TickSession}
 import org.apache.spark.sql.functions.col
 import graft.metrics.MetricsExposition
 import graft.operators._
@@ -31,8 +31,8 @@ import scala.util.chaining._
   * A tick plans and runs every action on the caller's tick session
   * (`TickSession`): a clone of the caller's session, kept across calls
   * while the caller's conf stays as it was. A tick's inputs are a few KB,
-  * so the clone fixes three settings whose fixed cost per query outweighs
-  * the work on such data:
+  * so the clone fixes five settings whose fixed cost per query or per job
+  * outweighs the work on such data:
   *  - whole-stage codegen off and `spark.sql.codegen.factoryMode`
   *    `NO_CODEGEN` (an internal Spark conf): operators, projections,
   *    predicates and orderings run interpreted, so a warm tick compiles
@@ -41,7 +41,12 @@ import scala.util.chaining._
   *  - adaptive execution off: each query is planned once and runs its
   *    shuffle stages in one job instead of one job each, and the SQL
   *    status store keeps one small plan per execution instead of every
-  *    re-planned version with its runtime metrics.
+  *    re-planned version with its runtime metrics;
+  *  - no broadcast joins (no size threshold, hints ignored): without
+  *    adaptive execution each broadcast would collect its side in a job
+  *    of its own before its query's job, so every join of a tick runs as
+  *    a shuffle join inside its action's one job, and a tick launches no
+  *    broadcast job.
   * The caller's session is never modified. The shared derivations
   * (`Snapshots.groupsDim`, `srSubjects` and `srRegistryCounts`) are read
   * on the caller's session and re-bound into the tick session with their
@@ -58,9 +63,14 @@ import scala.util.chaining._
   * watermarks, group lag and trend for the lag, the registry counts for
   * nothing), and the `.prom` file and the HTTP update follow the five
   * collects. The report derives its topics table from the watermarks and
-  * offsets and its groups table from the lag; the report JSON reads both,
-  * each export only its own table, and the notification follows the JSON
-  * and both exports. Those five frames (watermarks, offsets, lag, topics,
+  * offsets and its groups table from the lag. The report document is
+  * three 1-row fragments (`ClusterReporting`): the topic fragment collects
+  * its row once the topics table is held, the group fragment once the
+  * groups table is held, and the schema registry fragment once the
+  * watermarks are. The report JSON follows the three and assembles the
+  * document over a one-row local relation of their rows, which the
+  * optimizer folds, so it runs no job. Each export reads only its own
+  * table, and the notification follows the JSON and both exports. Those five frames (watermarks, offsets, lag, topics,
   * groups) are each held as an eager local checkpoint, so every plan over
   * them scans the materialized rows and carries no lineage. The tick
   * releases what it checkpointed at the next scan and when `runCluster`
@@ -180,7 +190,7 @@ object GraftApp {
     val tickSession = TickSession(spark)
     // a derivation, read on the caller's session, as a tick-session frame
     def derived(d: graft.Derivation[DataFrame]): DataFrame =
-      TickSession.rebind(d(spark, sfDir), tickSession)
+      SessionClones.rebind(d(spark, sfDir), tickSession)
     val loop = new Scheduler.ClusterLoop(cluster,
       sleeper = _ => (), // a run of `ticks` scans: don't wait between them
       onOverrun = ms => System.err.println(
@@ -240,13 +250,23 @@ object GraftApp {
           http.foreach(_.update(text))
         }
 
-        // the report describes the snapshot this tick's scan just took
+        // the report describes the snapshot this tick's scan just took:
+        // each fragment collects its one row once its input is held, and
+        // the document is assembled over those rows without another job
         if (reportDue) {
+          val gov = cluster.governance
           val topics = after(wm, go)(hold(TopicAnalytics.topicsDf(wm.join(), go.join(), gd)))
           val groups = after(lag)(hold(GroupAnalytics.groupsDf(lag.join(), gd)))
-          val reportUrl = after(wm, topics, groups)(writeReport(cluster, outDir,
-            ClusterReporting.reportJson(clusterReport(cluster, topics.join(), groups.join(),
-              derived(Snapshots.srSubjects), wm.join()))))
+          val topicRow = after(topics)(ClusterReporting.topicFragment(topics.join(),
+            gov.topicCompliant, gov.topicExcluded).collect()(0))
+          val groupRow = after(groups)(ClusterReporting.groupFragment(groups.join(),
+            gov.groupCompliant, gov.groupExcluded).collect()(0))
+          val srRow = after(wm)(ClusterReporting.srFragment(derived(Snapshots.srSubjects),
+            wm.join().filter(col("s") === Snapshots.NumScans)).collect()(0))
+          val reportUrl = after(topicRow, groupRow, srRow)(writeReport(cluster, outDir,
+            ClusterReporting.reportJson(ClusterReporting.assemble(cluster.name,
+              java.time.Instant.now(), ClusterReporting.fragments(tickSession,
+                Seq(topicRow.join(), groupRow.join(), srRow.join()))))))
           val exports = Seq(topics -> "topics", groups -> "groups").map { case (df, table) =>
             after(df)(ClusterReporting.exportDf(df.join(), outDir,
               s"${table}_${cluster.name}", cluster.reporting.exportsFormats))
@@ -259,25 +279,6 @@ object GraftApp {
 
     try loop.loop(reportDue => tick(reportDue), Some(ticks))
     finally try release() finally actions.shutdown()
-  }
-
-  /** The cluster report over one tick's topics and groups tables, with
-    * `cluster`'s governance rules or the reference's defaults; `wm` is the
-    * tick's filtered watermarks, whose latest scan the report describes. */
-  private def clusterReport(cluster: ClusterConfig, topics: DataFrame, groups: DataFrame,
-                            srSubjects: DataFrame, wm: DataFrame): DataFrame = {
-    val gov = cluster.governance
-    ClusterReporting.clusterReport(cluster.name, topics, groups, srSubjects,
-      wm.filter(col("s") === Snapshots.NumScans),
-      java.time.Instant.now(),
-      topicCompliant = if (gov.topicCompliantRegexes.nonEmpty)
-        gov.topicCompliantRegexes else graft.operators.Governance.DefaultCompliant,
-      topicExcluded = if (gov.topicExcludedRegexes.nonEmpty)
-        gov.topicExcludedRegexes else graft.operators.Governance.DefaultExcluded,
-      groupCompliant = if (gov.groupCompliantRegexes.nonEmpty)
-        gov.groupCompliantRegexes else Seq("^[a-z]+$"),
-      groupExcluded = if (gov.groupExcludedRegexes.nonEmpty)
-        gov.groupExcludedRegexes else Seq("^g_dead"))
   }
 
   /** Writes the report JSON to `outDir`, and uploads it when the cluster's

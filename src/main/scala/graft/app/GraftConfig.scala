@@ -24,7 +24,17 @@ final case class GovernanceConfig(
     topicCompliantRegexes: Seq[String] = Seq.empty,
     topicExcludedRegexes: Seq[String] = Seq.empty,
     groupCompliantRegexes: Seq[String] = Seq.empty,
-    groupExcludedRegexes: Seq[String] = Seq.empty)
+    groupExcludedRegexes: Seq[String] = Seq.empty) {
+  import graft.operators.Governance
+  private def orDefault(regexes: Seq[String], default: Seq[String]) =
+    if (regexes.nonEmpty) regexes else default
+  // the rules the report applies: each list as configured, or the default when empty
+  def topicCompliant: Seq[String] = orDefault(topicCompliantRegexes, Governance.DefaultCompliant)
+  def topicExcluded: Seq[String] = orDefault(topicExcludedRegexes, Governance.DefaultExcluded)
+  def groupCompliant: Seq[String] =
+    orDefault(groupCompliantRegexes, Governance.DefaultGroupCompliant)
+  def groupExcluded: Seq[String] = orDefault(groupExcludedRegexes, Governance.DefaultGroupExcluded)
+}
 
 final case class ReportingConfig(
     evaluationPeriodSeconds: Long = 60L,

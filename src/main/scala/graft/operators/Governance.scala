@@ -20,6 +20,10 @@ object Governance {
   val DefaultCompliant: Seq[String] = Seq("^[a-z]+$")
   /** Default exclusions (skip internal/test topics). */
   val DefaultExcluded: Seq[String] = Seq("^t_empty")
+  /** Default consumer-group convention: single lowercase word. */
+  val DefaultGroupCompliant: Seq[String] = Seq("^[a-z]+$")
+  /** Default consumer-group exclusions (dead groups). */
+  val DefaultGroupExcluded: Seq[String] = Seq("^g_dead")
 
   /** any(re.match(r, name) for r in regexes) as a Column. */
   def anyMatch(c: Column, regexes: Seq[String]): Column =

@@ -216,13 +216,19 @@ object IncrementalDedup {
                  anchors: Int = Sketches.BandAnchors): DataFrame = {
     // --- stage 1: exact. Corpus hit, or a smaller same-hash crawl id.
     // The verdict/signature tables are localCheckpoint-materialized
-    // (lazy) because the candidate DAG below reuses them from several
-    // branches — left lazy, every branch re-scanned the crawl TEXT
-    // through md5 + the hash window (x128, 128 shuffle partitions:
-    // 79.6 s unmaterialized -> 58.9 s with these checkpoints -> 44.1 s
-    // once the caller also persists a pre-ranked index). Two text scans
-    // total: one for the verdicts, one for the survivors' signatures;
-    // everything after is skinny.
+    // because the candidate DAG below reuses them from several branches —
+    // unmaterialized, every branch re-scanned the crawl TEXT through md5 +
+    // the hash window (x128, 128 shuffle partitions: 79.6 s
+    // unmaterialized -> 58.9 s with these checkpoints -> 44.1 s once the
+    // caller also persists a pre-ranked index). Two text scans total: one
+    // for the verdicts, one for the survivors' signatures; everything
+    // after is skinny. The checkpoints are eager: a lazy one is written
+    // by the first job that reads it, and two broadcast exchanges of one
+    // adaptive query over it can deadlock Spark 4.1's checkpointing
+    // (DAGScheduler.getCacheLocs holds the RDD's lock waiting for the
+    // checkpoint lock, which the broadcast thread writing the checkpoint
+    // holds while it waits for that RDD's lock). An eager checkpoint is
+    // written before any job that reads it exists.
     val hashed = crawl.select(col("doc_id"), col("text"), col("source"),
       md5(col("text")).as("h"))
     val batchRank = Window.partitionBy(col("h")).orderBy(col("doc_id"))
@@ -233,13 +239,13 @@ object IncrementalDedup {
       .withColumn("exact_dup",
         coalesce(col("corpus_hit"), lit(false)) || col("batch_rn") > 1)
       .select(col("doc_id"), col("source"), col("exact_dup"))
-      .localCheckpoint(false)
+      .localCheckpoint(eager = true)
     val survIds = staged.filter(!col("exact_dup")).select(col("doc_id"))
 
     // --- stage 2: minhash candidates, decomposed union-faithfully over
     // SKINNY band rows; signatures join back once per deduped pair.
     val crawlSigs = Sketches.minHashSignatures(
-      crawl.join(survIds, Seq("doc_id"), "left_semi"), n).localCheckpoint(false)
+      crawl.join(survIds, Seq("doc_id"), "left_semi"), n).localCheckpoint(eager = true)
     val crawlBands = bandRows(crawlSigs)
     // per-bucket anchor ranks + corpus occupancy (how many anchor slots
     // the union run spends on corpus rows — corpus ids precede all

@@ -1,6 +1,7 @@
 package graft.report
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import graft.operators.{Governance, SchemaRegistryOps}
 
@@ -17,7 +18,11 @@ import graft.operators.{Governance, SchemaRegistryOps}
   * filtering the collected candidate entries against the percentile
   * thresholds computed in the same pass (row-local array ops on the single
   * result row). The final document is a nested struct row serialized with
-  * to_json; the 1-row crossJoins are size-invariant.
+  * to_json; the 1-row crossJoins are size-invariant. Each pass is its own
+  * 1-row fragment (`topicFragment`, `groupFragment`, `srFragment`) and
+  * `assemble` builds the document over their columns, so a caller can
+  * collect each fragment as soon as its input is ready and assemble the
+  * collected rows (`fragments`) without another job.
   *
   * Deviations from the reference, per SURVEY §2.10:
   *  - Statistics.consumer_groups is populated (Q4 — reference declares but
@@ -42,37 +47,35 @@ object ClusterReporting {
   private val MostActiveMapType =
     "map<string,struct<partitions:bigint,total_messages:bigint,new_messages:bigint,active_groups:bigint>>"
 
-  /** The full ClusterReport as a single nested row. `now` is injected so
-    * report generation is reproducible (the reference scatters utcnow()
-    * across call sites — SURVEY §7.4). */
+  /** The full ClusterReport as a single nested row: [[assemble]] over the
+    * cross join of the three 1-row fragments. `now` is injected so report
+    * generation is reproducible (the reference scatters utcnow() across
+    * call sites — SURVEY §7.4). */
   def clusterReport(clusterName: String, topics: DataFrame, groups: DataFrame,
                     sr: DataFrame, wmTopics: DataFrame, now: java.time.Instant,
                     topicCompliant: Seq[String] = Governance.DefaultCompliant,
                     topicExcluded: Seq[String] = Governance.DefaultExcluded,
-                    groupCompliant: Seq[String] = Seq("^[a-z]+$"),
-                    groupExcluded: Seq[String] = Seq("^g_dead")): DataFrame = {
-    val ts = java.time.LocalDateTime.ofInstant(now, java.time.ZoneOffset.UTC)
-      .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
+                    groupCompliant: Seq[String] = Governance.DefaultGroupCompliant,
+                    groupExcluded: Seq[String] = Governance.DefaultGroupExcluded): DataFrame =
+    assemble(clusterName, now,
+      topicFragment(topics, topicCompliant, topicExcluded)
+        .crossJoin(groupFragment(groups, groupCompliant, groupExcluded))
+        .crossJoin(srFragment(sr, wmTopics)))
 
-    def nonCompliantAggs(prefix: String): Seq[Column] = Seq(
-      sum(when(col("excluded_name"), 1L).otherwise(0L)).as(s"${prefix}_excluded"),
-      sum(when(!col("compliant_name") && !col("excluded_name"), 1L).otherwise(0L))
-        .as(s"${prefix}_noncomp"),
-      coalesce(sort_array(collect_list(
-        when(!col("compliant_name") && !col("excluded_name"), col("name")))),
-        array().cast("array<string>")).as(s"${prefix}_noncomp_names"))
+  private def nonCompliantAggs(prefix: String): Seq[Column] = Seq(
+    sum(when(col("excluded_name"), 1L).otherwise(0L)).as(s"${prefix}_excluded"),
+    sum(when(!col("compliant_name") && !col("excluded_name"), 1L).otherwise(0L))
+      .as(s"${prefix}_noncomp"),
+    coalesce(sort_array(collect_list(
+      when(!col("compliant_name") && !col("excluded_name"), col("name")))),
+      array().cast("array<string>")).as(s"${prefix}_noncomp_names"))
 
-    def namingStruct(prefix: String, totalCol: Column): Column = struct(
-      totalCol.cast("double").as("total"),
-      col(s"${prefix}_excluded").cast("double").as("total_ignored"),
-      (totalCol - col(s"${prefix}_excluded")).cast("double").as("total_measured"),
-      (lit(100.0) - col(s"${prefix}_noncomp") * lit(100.0) /
-        nullif(totalCol - col(s"${prefix}_excluded"), lit(0L)))
-        .as("compliant_percentage"),
-      col(s"${prefix}_noncomp_names").as("non_compliant_resources"))
-
-    // --- one pass over topics: statistics scalars, most-active threshold
-    //     and candidates, all three waste categories, topic governance.
+  /** One pass over topics, as one row: statistics scalars, most-active
+    * threshold and candidates, all three waste categories, topic
+    * governance. */
+  def topicFragment(topics: DataFrame,
+                    compliant: Seq[String] = Governance.DefaultCompliant,
+                    excluded: Seq[String] = Governance.DefaultExcluded): DataFrame = {
     val catAggs = CategoryMeta.zipWithIndex.flatMap { case ((_, pred, _), i) =>
       Seq(
         collect_list(when(pred, struct(col("name"), col("partitions"))))
@@ -90,29 +93,36 @@ object ClusterReporting {
           struct(col("partitions"), col("total_messages"), col("new_messages"),
             col("active_groups")).as("value")))).as("active_entries")) ++
       catAggs ++ nonCompliantAggs("tg")
-    val topicAgg = topics
-      .withColumn("excluded_name", Governance.anyMatch(col("name"), topicExcluded))
-      .withColumn("compliant_name", Governance.anyMatch(col("name"), topicCompliant))
+    topics
+      .withColumn("excluded_name", Governance.anyMatch(col("name"), excluded))
+      .withColumn("compliant_name", Governance.anyMatch(col("name"), compliant))
       .agg(topicAggs.head, topicAggs.tail: _*)
+  }
 
-    // --- one pass over groups: consumer-group stats + group governance.
+  /** One pass over groups, as one row: consumer-group stats and group
+    * governance. */
+  def groupFragment(groups: DataFrame,
+                    compliant: Seq[String] = Governance.DefaultGroupCompliant,
+                    excluded: Seq[String] = Governance.DefaultGroupExcluded): DataFrame = {
     val groupAggs = Seq(
       count(lit(1)).as("g_total"),
       sum(when(col("overall_lag") === 0 && col("members") > 0, 1L).otherwise(0L))
         .as("g_active"),
       sum(when(col("overall_lag") > 0 || col("members") === 0, 1L).otherwise(0L))
         .as("g_inactive")) ++ nonCompliantAggs("gg")
-    val groupAgg = groups
-      .withColumn("excluded_name", Governance.anyMatch(col("name"), groupExcluded))
-      .withColumn("compliant_name", Governance.anyMatch(col("name"), groupCompliant))
+    groups
+      .withColumn("excluded_name", Governance.anyMatch(col("name"), excluded))
+      .withColumn("compliant_name", Governance.anyMatch(col("name"), compliant))
       .agg(groupAggs.head, groupAggs.tail: _*)
+  }
 
-    // --- schema registry, ONE pass: the anti-join becomes a left join
-    //     against the distinct topic list (cardinality-preserving, so
-    //     collect_list sees exactly the rows the anti-join produced) and
-    //     both the distinct counts and the unused-subject fragment fold
-    //     into a single aggregation — one branch, not two.
-    val srAgg = SchemaRegistryOps.withBaseName(sr)
+  /** The schema registry, ONE pass, as one row: the anti-join becomes a
+    * left join against the distinct topic list (cardinality-preserving, so
+    * collect_list sees exactly the rows the anti-join produced) and both
+    * the distinct counts and the unused-subject fragment fold into a
+    * single aggregation — one branch, not two. */
+  def srFragment(sr: DataFrame, wmTopics: DataFrame): DataFrame =
+    SchemaRegistryOps.withBaseName(sr)
       .join(broadcast(wmTopics.select(col("topic").as("base")).distinct()
         .withColumn("known", lit(true))), Seq("base"), "left")
       .agg(
@@ -123,6 +133,28 @@ object ClusterReporting {
           array().cast("array<string>")).as("detected_unused"),
         countDistinct(when(col("known").isNull, col("subject")))
           .as("detected_unused_count"))
+
+  /** The fragments' collected rows as one one-row frame of `spark`: a
+    * local relation, so [[assemble]] over it is folded by the optimizer
+    * and collecting the report runs no job. */
+  def fragments(spark: SparkSession, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row.merge(rows: _*)),
+      StructType(rows.flatMap(_.schema)))
+
+  /** The report document over the one row of the three fragments' columns
+    * (`fragments`), for `clusterName` at `now`. */
+  def assemble(clusterName: String, now: java.time.Instant, fragments: DataFrame): DataFrame = {
+    val ts = java.time.LocalDateTime.ofInstant(now, java.time.ZoneOffset.UTC)
+      .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSS"))
+
+    def namingStruct(prefix: String, totalCol: Column): Column = struct(
+      totalCol.cast("double").as("total"),
+      col(s"${prefix}_excluded").cast("double").as("total_ignored"),
+      (totalCol - col(s"${prefix}_excluded")).cast("double").as("total_measured"),
+      (lit(100.0) - col(s"${prefix}_noncomp") * lit(100.0) /
+        nullif(totalCol - col(s"${prefix}_excluded"), lit(0L)))
+        .as("compliant_percentage"),
+      col(s"${prefix}_noncomp_names").as("non_compliant_resources"))
 
     val catStructs = CategoryMeta.zipWithIndex.map { case ((key, _, desc), i) =>
       struct(lit(key).as("key"),
@@ -141,7 +173,7 @@ object ClusterReporting {
           e.getField("value").getField("total_messages") > col("q_total"))),
       map().cast(MostActiveMapType))
 
-    topicAgg.crossJoin(groupAgg).crossJoin(srAgg)
+    fragments
       .select(struct(
         lit(clusterName).as("cluster_name"),
         struct(lit(ts).as("timestamp")).as("metadata"),

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** The snapshot lake: how the history tables persist at scale.
   *
@@ -25,31 +26,50 @@ object SnapshotLake {
     writeGroupOffsets(Snapshots.groupOffsets(spark, sfDir), s"$lakeDir/group_offsets")
   }
 
-  def writeWatermarks(wm: DataFrame, path: String): Unit =
-    wm.write.mode("overwrite")
-      .partitionBy("cluster", "s")
-      .parquet(path)
+  /** The lake's watermarks table, the columns and types of
+    * `Snapshots.watermarks`: its writer writes these and its reader reads
+    * them, with no schema inferred from the files. */
+  val WatermarksSchema: StructType = new StructType()
+    .add("cluster", StringType).add("topic", StringType).add("partition_id", LongType)
+    .add("low", LongType).add("high", LongType).add("scan_ts", LongType).add("s", LongType)
 
-  /** Read back with the canonical column order and types: a partitioned
-    * read appends the partition columns last and infers `s` as INT from
-    * the directory names — restore the writer's schema so lake-backed
-    * and derivation-backed DataFrames are interchangeable. */
+  /** The lake's group offsets table, the columns and types of
+    * `Snapshots.groupOffsets`. */
+  val GroupOffsetsSchema: StructType = new StructType()
+    .add("cluster", StringType).add("grp", StringType).add("topic", StringType)
+    .add("partition_id", LongType).add("committed", LongType).add("scan_ts", LongType)
+    .add("s", LongType)
+
+  def writeWatermarks(wm: DataFrame, path: String): Unit =
+    writeTable(wm, WatermarksSchema, path)
+
+  /** Reads the watermarks under `path` with [[WatermarksSchema]]. The
+    * schema is declared, so building the frame launches no job to infer
+    * it from the parquet footers; the partition columns `cluster` and `s`
+    * take their declared types from the directory names, and the columns
+    * come back in the writer's order (a partitioned read appends the
+    * partition columns last), so lake-backed and derivation-backed frames
+    * are interchangeable. */
   def readWatermarks(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-      .select(col("cluster").cast("string"), col("topic"), col("partition_id"),
-        col("low"), col("high"), col("scan_ts"), col("s").cast("long").as("s"))
+    readTable(spark, WatermarksSchema, path)
 
   /** group_offsets in the same (cluster, s) layout. */
   def writeGroupOffsets(go: DataFrame, path: String): Unit =
-    go.write.mode("overwrite")
+    writeTable(go, GroupOffsetsSchema, path)
+
+  /** Reads the group offsets under `path` with [[GroupOffsetsSchema]], as
+    * [[readWatermarks]] reads the watermarks. */
+  def readGroupOffsets(spark: SparkSession, path: String): DataFrame =
+    readTable(spark, GroupOffsetsSchema, path)
+
+  private def writeTable(df: DataFrame, schema: StructType, path: String): Unit =
+    df.select(schema.map(f => col(f.name).cast(f.dataType)): _*)
+      .write.mode("overwrite")
       .partitionBy("cluster", "s")
       .parquet(path)
 
-  def readGroupOffsets(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-      .select(col("cluster").cast("string"), col("grp"), col("topic"),
-        col("partition_id"), col("committed"), col("scan_ts"),
-        col("s").cast("long").as("s"))
+  private def readTable(spark: SparkSession, schema: StructType, path: String): DataFrame =
+    spark.read.schema(schema).parquet(path).select(schema.fieldNames.map(col): _*)
 
   /** Latest-scan view — prunes to the single newest partition directory. */
   def latest(spark: SparkSession, path: String): DataFrame = {

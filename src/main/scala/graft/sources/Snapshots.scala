@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionClones
 import graft.{Derivation, Derivations, Storage, Warm}
 import org.apache.spark.storage.StorageLevel
 
@@ -112,11 +113,13 @@ object Snapshots {
     *    disabled for this read so a tz-less parquet timestamp lands as
     *    TimestampType, whose internal value IS the stored micros —
     *    unix_micros is then exact and session-timezone-independent.
-    * The DuckDB oracles are width-agnostic already (epoch_ns(ts)). */
+    * The DuckDB oracles are width-agnostic already (epoch_ns(ts)).
+    * Both settings hold on a clone of `spark` that plans the read
+    * (`EventsRead`); the frame is re-bound into `spark`, whose conf stays
+    * as it was, and its scan still reads with the clone's settings. */
   def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val df = spark.read.parquet(s"$dir/events.parquet")
+    val df = SessionClones.rebind(
+      EventsRead(spark).read.parquet(s"$dir/events.parquet"), spark)
     import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
     df.schema("ts").dataType match {
       case LongType => df
@@ -129,6 +132,11 @@ object Snapshots {
         s"events.ts arrived as $other — expected BIGINT nanos or a parquet timestamp")
     }
   }
+
+  /** The sessions that plan the events read. */
+  private val EventsRead = new SessionClones(Seq(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false"))
 
   private def events(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

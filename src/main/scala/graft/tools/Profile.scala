@@ -104,15 +104,34 @@ private[graft] object ProfListener {
 }
 
 /** Jobs, stages and tasks of every job and stage that ended in the
-  * context it is added to. */
+  * context it is added to, and each ended job's interval, in the order
+  * the jobs ended. */
 private final class SchedulerCounts extends SparkListener {
   val jobs, stages, tasks = new AtomicLong()
-  override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.incrementAndGet()
+  private val started = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
+  private val ended = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+  override def onJobStart(e: SparkListenerJobStart): Unit = started.put(e.jobId, e.time)
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+    val start = Option(started.remove(e.jobId)).fold(e.time)(_.longValue)
+    ended.synchronized(ended += start -> e.time)
+    jobs.incrementAndGet()
+  }
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
     stages.incrementAndGet()
     tasks.addAndGet(e.stageInfo.numTasks)
   }
   def snap(): (Long, Long, Long) = (jobs.get, stages.get, tasks.get)
+
+  /** Seconds during which at least one of the jobs that ended `from`-th
+    * to `until`-th was running: the union of their intervals, so time
+    * that overlapping jobs share counts once. */
+  def busySeconds(from: Long, until: Long): Double = {
+    val intervals = ended.synchronized(ended.slice(from.toInt, until.toInt).toSeq).sorted
+    val (busyMs, _) = intervals.foldLeft((0L, Long.MinValue)) { case ((sum, reach), (s, e)) =>
+      (sum + math.max(0L, e - math.max(s, reach)), math.max(reach, e))
+    }
+    busyMs / 1000.0
+  }
 }
 
 /** The per-query profile of the declared query surface, one JSON line per
@@ -131,8 +150,11 @@ private final class SchedulerCounts extends SparkListener {
   *    of one tick each, on c1 and c2 in turn, and prints one line per
   *    tick: its wall time, the SQL executions, physical-plan-description
   *    characters and SQL plan metrics it added to the SQL status store,
-  *    its jobs, stages and tasks, the Janino compiles it caused and the
-  *    heap used after a GC once it ended.
+  *    its jobs, the seconds during which at least one of its jobs ran
+  *    (`busy_s`, the union of their intervals: work removed from the
+  *    tick lowers it, work that only overlaps other work does not), its
+  *    stages and tasks, the Janino compiles it caused and the heap used
+  *    after a GC once it ended.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<sf dir> sbt "runMain graft.tools.Profile <query...|warmup|tick [n]>"
   */
@@ -231,7 +253,9 @@ object Profile extends AdaptiveSparkPlanHelper {
           s""""executions":${added.size},""" +
           s""""plan_chars":${added.map(_.physicalPlanDescription.length.toLong).sum},""" +
           s""""sql_metrics":${added.map(_.metrics.size).sum},""" +
-          s""""jobs":${after._1 - before._1},"stages":${after._2 - before._2},""" +
+          s""""jobs":${after._1 - before._1},""" +
+          f""""busy_s":${counts.busySeconds(before._1, after._1)}%.3f,""" +
+          s""""stages":${after._2 - before._2},""" +
           s""""tasks":${after._3 - before._3},"codegen_compiles":${compiledNow - compiled},""" +
           f""""heap_mb":${heapAfterGcMb()}%.1f}""")
       }

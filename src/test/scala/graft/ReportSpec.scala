@@ -3,7 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.report.ClusterReporting
 import graft.sources.Snapshots
-import graft.operators.{GroupAnalytics, TopicAnalytics}
+import graft.operators.{Governance, GroupAnalytics, TopicAnalytics}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Report-contract test: the emitted JSON carries the reference's field
   * names and nesting (kafka_overwatch/specs/report.json). */
@@ -48,6 +51,63 @@ class ReportSpec extends AnyFunSuite {
     assert(j.contains("2023-11-14T22:16:20.000000"))
     // Q4 extension: consumer_groups populated
     assert(j.contains("\"active\"") && j.contains("\"inactive\""))
+  }
+
+  /** The report's JSON assembled over the three collected fragment rows,
+    * as a service tick assembles it, and as `clusterReport` builds it. */
+  private def bothWays(topics: DataFrame, groups: DataFrame,
+                       topicRules: (Seq[String], Seq[String]),
+                       groupRules: (Seq[String], Seq[String])): (String, String) = {
+    val dir = TestSpark.Sf0001
+    val sr = Snapshots.srSubjects(spark, dir)
+    val wm = Snapshots.watermarks(spark, dir).filter(col("s") === Snapshots.NumScans)
+    val now = java.time.Instant.ofEpochSecond(1700000180L)
+    val rows = Seq(
+      ClusterReporting.topicFragment(topics, topicRules._1, topicRules._2),
+      ClusterReporting.groupFragment(groups, groupRules._1, groupRules._2),
+      ClusterReporting.srFragment(sr, wm)).map(_.collect()(0))
+    val assembled = ClusterReporting.assemble("c1", now, ClusterReporting.fragments(spark, rows))
+    // folded into a local relation: collecting the report runs no job
+    assert(assembled.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+      assembled.queryExecution.executedPlan.treeString)
+    (ClusterReporting.reportJson(assembled),
+      ClusterReporting.reportJson(ClusterReporting.clusterReport("c1", topics, groups, sr, wm,
+        now, topicRules._1, topicRules._2, groupRules._1, groupRules._2)))
+  }
+
+  private def tables(): (DataFrame, DataFrame) = {
+    val dir = TestSpark.Sf0001
+    val wm = Snapshots.watermarks(spark, dir)
+    val go = Snapshots.groupOffsets(spark, dir)
+    val gd = Snapshots.groupsDim(spark, dir)
+    // held, as a tick holds them, so both ways read the same rows
+    (TopicAnalytics.topicsDf(wm, go, gd).localCheckpoint(),
+      GroupAnalytics.groupsDf(GroupAnalytics.lagByScan(wm, go), gd).localCheckpoint())
+  }
+
+  private val Defaults = (Governance.DefaultCompliant, Governance.DefaultExcluded)
+  private val GroupDefaults = (Governance.DefaultGroupCompliant, Governance.DefaultGroupExcluded)
+
+  test("the report assembled from its fragment rows is clusterReport's, byte for byte") {
+    val (topics, groups) = tables()
+    val (assembled, direct) = bothWays(topics, groups, Defaults, GroupDefaults)
+    assert(assembled === direct)
+    assert(assembled.contains("\"most_active_topics\":{\""), assembled)
+  }
+
+  test("fragments assemble clusterReport's JSON under custom governance rules") {
+    val (topics, groups) = tables()
+    val (assembled, direct) = bothWays(topics, groups,
+      (Seq("^[a-z_]+$", "^t_"), Seq("^t_stale")), (Seq("^g_"), Seq("^g_empty", "^g_mixed")))
+    assert(assembled === direct)
+    assert(assembled !== bothWays(topics, groups, Defaults, GroupDefaults)._1)
+  }
+
+  test("fragments assemble clusterReport's JSON over an empty topics table") {
+    val (topics, groups) = tables()
+    val (assembled, direct) = bothWays(topics.filter(lit(false)), groups, Defaults, GroupDefaults)
+    assert(assembled === direct)
+    assert(assembled.contains("\"topics\":0,"), assembled)
   }
 
   test("exportDf writes csv and json") {
