@@ -159,7 +159,10 @@ object GraftApp {
     * tidy as event-time timeout) and a real checkpoint, writing delta rows
     * to parquet — the M6 wiring (a live deployment swaps the
     * fixture-backed source for one polling AdminClient). Restarting with
-    * the same outDir resumes from the checkpoint. */
+    * the same outDir resumes from the checkpoint. The query runs on the
+    * caller's stream session (`OffsetStream.deltasWithTtl`): one
+    * micro-batch per scan, the TTL evicting inside the next data batch;
+    * `spark` itself starts no query and its conf is left as it was. */
   def runStreaming(spark: SparkSession, sfDir: String, outDir: String,
                    watermarkDelay: String = "60 seconds",
                    ttlSeconds: Long = 180L): Unit = {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.graft.{SessionClones, StreamSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming form of the watermark-delta analytics (SURVEY §2.9).
@@ -65,7 +66,23 @@ object OffsetStream extends Serializable {
     * kafka_overwatch/kafka_resources/topics.py:64-72) as event-time state
     * timeout: a partition unseen for `ttlSeconds` of event time has its
     * state evicted, so a later reappearance starts a fresh baseline
-    * (and state size tracks the LIVE topic set, not history). */
+    * (and state size tracks the LIVE topic set, not history).
+    *
+    * The frame is bound to the caller's [[org.apache.spark.sql.graft.StreamSession]],
+    * so the query it starts runs one micro-batch per scan: the watermark
+    * moves on every scan but starts no eviction-only batch. A partition
+    * whose TTL has passed is evicted inside the next data batch, which
+    * runs with the watermark the eviction-only batch had. Eviction emits
+    * no row, so the rows do not change, with one exception: a partition
+    * that comes back in exactly that batch is processed with its data
+    * before the timeouts, keeps its state and emits a delta against its
+    * old baseline (for it the TTL reads one scan longer).
+    *
+    * Side effects of the stream session: the query, its progress and any
+    * memory-sink view live on the stream session (`query.sparkSession`),
+    * not on the caller, whose `spark.streams` does not list the query.
+    * The caller's streaming query listeners hear it, since the stream
+    * session registers them; the caller's conf is not changed. */
   def deltasWithTtl(scans: Dataset[WatermarkScan],
                     watermarkDelay: String = "60 seconds",
                     ttlSeconds: Long = 180L): Dataset[PartitionDelta] = {
@@ -90,7 +107,8 @@ object OffsetStream extends Serializable {
         out
       }
     }
-    withTs.groupByKey(w => (w.cluster, w.topic, w.partition_id))
+    val out = withTs.groupByKey(w => (w.cluster, w.topic, w.partition_id))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
+    SessionClones.rebind(out.toDF(), StreamSession(scans.sparkSession)).as[PartitionDelta]
   }
 }

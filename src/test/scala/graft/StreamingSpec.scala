@@ -63,7 +63,7 @@ class StreamingSpec extends AnyFunSuite {
       input.addData(Seq(WatermarkScan("c1", "gone", 0L, 0L, 50L, t0 + 610),
         WatermarkScan("c1", "keep", 0L, 0L, 40L, t0 + 610)))
       q.processAllAvailable()
-      val byTopic = spark.sql("SELECT topic, count(*) FROM ttl_out GROUP BY 1")
+      val byTopic = q.sparkSession.sql("SELECT topic, count(*) FROM ttl_out GROUP BY 1")
         .as[(String, Long)].collect().toMap
       assert(byTopic("keep") === 3L)         // three deltas after baseline
       assert(!byTopic.contains("gone"))      // rebaselined, no delta emitted
